@@ -16,12 +16,15 @@ the first query's number.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from py4j.protocol import Py4JJavaError  # noqa: E402
 
 from spark_streaming_test_spark import registry  # noqa: E402
 from spark_streaming_test_spark.session import (  # noqa: E402
@@ -199,6 +202,91 @@ def calibration_probe(spark) -> dict[str, float]:
     return {"cpu_sec": cpu, "shuffle_sec": shuffle}
 
 
+REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+
+# A stage is "hot single-task" when it ran on <= HOT_MAX_TASKS tasks yet
+# burned >= HOT_MIN_RUN_S of executor time: serialized compute, the
+# scale-killer that tools/sweep_single_task.py hunts across the registry.
+HOT_MAX_TASKS = 2
+HOT_MIN_RUN_S = 0.3
+
+
+def median(runs: list[float]) -> float:
+    return sorted(runs)[len(runs) // 2]
+
+
+def run_query(spark, name: str, fn, sf_dir: str, repeats: int):
+    """Time one registry query the bench's way; returns (cold_s, runs).
+
+    One timed cold run, then ``repeats`` timed runs, each forced into
+    the ``noop`` sink under job group ``f"{name}#{label}"`` (``cold``,
+    ``run1``, ...) for hot_stages. The cold run pays JIT/codegen and,
+    for module-cached queries (edge index, co-purchase pairs, IVF), the
+    cache BUILD, so it is the only number where a cache-build
+    regression shows. Then reset_query_state isolates the next query:
+    60+ queries' accumulated checkpoints slowed the suite's tail
+    iterative queries ~1.7x (spectral bisection 13 s alone, 24 s at
+    position 68)."""
+    sc = spark.sparkContext
+
+    def timed(label: str) -> float:
+        sc.setJobGroup(f"{name}#{label}", name)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+
+    try:
+        cold = timed("cold")
+        runs = [timed(f"run{i}") for i in range(1, repeats + 1)]
+    finally:
+        sc._jsc.clearJobGroup()
+        reset_query_state(spark)
+    return cold, runs
+
+
+def hot_stages(spark, name: str) -> list[dict]:
+    """Hot single-task stages of run_query's runs of ``name``, each
+    tagged with its run label, read from Spark's in-process status
+    store (works with the UI disabled): job group -> job ids -> stage
+    ids -> the stage's last attempt."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    hot, seen = [], set()
+    for i in itertools.count():
+        label = f"run{i}" if i else "cold"
+        jobs = tracker.getJobIdsForGroup(f"{name}#{label}")
+        if not jobs:
+            break
+        for job in jobs:
+            info = tracker.getJobInfo(job)
+            for sid in info.stageIds if info else ():
+                if sid in seen:
+                    continue
+                seen.add(sid)
+                try:
+                    s = store.lastStageAttempt(sid)
+                except Py4JJavaError as e:
+                    # evicted past spark.ui.retainedStages (long
+                    # iterative queries): nothing left to read
+                    if "NoSuchElementException" not in str(e.java_exception):
+                        raise
+                    continue
+                if (str(s.status()) == "COMPLETE"
+                        and s.numCompleteTasks() <= HOT_MAX_TASKS
+                        and s.executorRunTime() >= HOT_MIN_RUN_S * 1000):
+                    hot.append({
+                        "run": label,
+                        "stage": sid,
+                        "tasks": s.numCompleteTasks(),
+                        "run_s": round(s.executorRunTime() / 1000, 3),
+                        "input_mb": s.inputBytes() >> 20,
+                        "shuffle_read_kb": s.shuffleReadBytes() >> 10,
+                        "name": s.name()[:80],
+                    })
+    return hot
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -223,47 +311,19 @@ def main() -> None:
 
     calibration = calibration_probe(spark)
 
-    # Each query runs 1 warm-up + 3 timed repeats. The warm-up pays the
-    # one-time JIT/codegen compilation (seconds for wide unrolled
-    # expressions, amortized to zero over any real workload); the MEDIAN
-    # of the repeats is the steady-state number BASELINE.md tracks — on a
-    # shared local[32] box single runs of sub-3-second queries jitter
-    # ±2×, and the r4 verdict flagged four such phantom "regressions".
-    # The raw repeats ship in the JSON so noise is separable from plan
-    # regressions without re-running.
+    # The MEDIAN of the repeats is the steady-state number BASELINE.md
+    # tracks: on a shared local[32] box single runs of sub-3-second
+    # queries jitter ±2× (the r4 verdict flagged four such phantom
+    # "regressions"). Raw repeats and cold times ship in the sidecar and
+    # history records only; the final stdout line is the driver contract.
     timings: dict[str, float] = {}
     repeats: dict[str, list[float]] = {}
-    # The warm-up run is also TIMED (VERDICT r13 ask #3): for queries
-    # backed by module caches (edge index, co-purchase pairs, IVF) the
-    # timed repeats are warm-path by design, so the cold number is the
-    # only place a cache-BUILD regression shows up round-over-round.
-    # Cold times ship in the sidecar/history records only — the final
-    # stdout line (the driver contract) is unchanged.
     cold: dict[str, float] = {}
-    n_repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     for name in HEADLINE:
-        fn = qs[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        cold[name] = round(time.perf_counter() - t0, 3)
-        runs = []
-        for _ in range(n_repeats):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        repeats[name] = runs
-        timings[name] = sorted(runs)[len(runs) // 2]
-        # Cross-query isolation (the driver_sim r10 lesson, now
-        # measured to matter for TIMING too): checkpointed RDDs from
-        # 60+ earlier queries accumulate and slow the iterative
-        # queries at the suite's tail by ~1.7x (spectral bisection
-        # 13 s standalone vs 24 s at position 68). reset_query_state
-        # clears the registered cross-query frame caches FIRST (their
-        # checkpoints are unrecoverable once unpersisted), then the
-        # SQL cache and all persisted RDD blocks. Each query's warm-up
-        # rebuilds whatever caches it uses, so the timed repeats stay
-        # warm-path.
-        reset_query_state(spark)
+        cold[name], repeats[name] = run_query(
+            spark, name, qs[name], sf_dir, REPEATS
+        )
+        timings[name] = median(repeats[name])
 
     # Per-query numbers (medians + raw repeats) are diagnostics, not
     # part of the driver-recorded line; inlining repeats in r5 — and

@@ -86,13 +86,15 @@ def bpe_train(words: DataFrame, n_merges: int = N_MERGES) -> list[dict]:
     newly created occurrences share one name and counts could rise),
     and (c) the collected prefix provably contains every pair with
     count >= c2 (last prefix row < c2, or the prefix is the whole
-    frame), then post-merge no pair can reach c2 and (l2, r2) — whose
-    own count is unchanged, since (a) forces it disjoint — is the
+    frame), and (d) merge 1 is not a self-merge (l1 != r1: merging (a,a)
+    inside 'aaa' mints (aa,a), bounded by c1, not by a touched pair's
+    count below c2), then post-merge no pair can reach c2 and (l2, r2) —
+    whose own count is unchanged, since (a) forces it disjoint — is the
     unique (cnt desc, l, r) argmax with the SAME count the sequential
     loop would record. Any doubt falls back to a single merge, so the
     merge table is bitwise the sequential one's (verified: identical
-    tables at sf0.001/0.01/0.1, sampled and full; batching fired 3 of
-    7 opportunities at every SF — 8 merges in 5 collects)."""
+    tables at sf0.001/0.01/0.1, sampled and full; batching fired 3 of 7
+    opportunities at every SF — 8 merges in 5 collects)."""
     syms = words.select(
         F.col("n"),
         F.concat_ws(SEP, F.split(F.col("word"), "(?!^)(?=.)")).alias("s"),
@@ -169,7 +171,7 @@ def bpe_train(words: DataFrame, n_merges: int = N_MERGES) -> list[dict]:
         syms = _apply(syms, b.l, b.r)
         it += 1
         # Lookahead: apply the runner-up too when the docstring's
-        # (a)/(b)/(c) conditions hold — its count is provably the one
+        # (a)-(d) conditions hold — its count is provably the one
         # the sequential loop's next aggregation would produce.
         if it < n_merges and len(top) >= 2:
             b2 = top[1]
@@ -183,7 +185,8 @@ def bpe_train(words: DataFrame, n_merges: int = N_MERGES) -> list[dict]:
                 (p.l in touched or p.r in touched) and p.cnt >= cnt2
                 for p in top[1:]
             )
-            if prefix_complete and token_is_new and no_touched_tie:
+            if (prefix_complete and token_is_new and no_touched_tie
+                    and b.l != b.r):
                 merges.append(
                     {
                         "iteration": it,

@@ -560,7 +560,7 @@ LTTB_B = 24  # target interior buckets (selected points = B + first + last)
     "ts_lttb_downsample",
     tags=("timeseries", "downsample", "lttb"),
     oracle=f"""
-WITH hourly AS (
+WITH RECURSIVE hourly AS (
   SELECT event_type,
          CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h,
          CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT) AS v
@@ -577,60 +577,59 @@ sized AS (
   SELECT *, LEAST({LTTB_B}, n - 2) AS beff, h - h0 AS tr
   FROM ser WHERE n >= 3
 ),
-firstlast AS (
+firstlast AS MATERIALIZED (
   SELECT event_type,
          MIN(CASE WHEN rn = 1 THEN tr END) AS tf,
          MIN(CASE WHEN rn = 1 THEN v END) AS vf,
          MIN(CASE WHEN rn = n THEN tr END) AS tl,
          MIN(CASE WHEN rn = n THEN v END) AS vl,
+         MIN(beff) AS beff,
          MIN(h0) AS h0
   FROM sized GROUP BY event_type
 ),
-interior AS (
+interior AS MATERIALIZED (
   SELECT event_type,
          CAST(floor(((rn - 2) * beff) / CAST(n - 2 AS DOUBLE)) AS BIGINT) AS k,
          tr, v
   FROM sized WHERE rn > 1 AND rn < n
 ),
-bkt AS MATERIALIZED (
+bkt AS (
   SELECT event_type, k,
-         list([tr, v] ORDER BY tr) AS cands,
          CAST(SUM(tr) AS BIGINT) AS st, CAST(SUM(v) AS BIGINT) AS sv,
          COUNT(*) AS cnt
   FROM interior GROUP BY event_type, k
 ),
-bkt2 AS (
-  SELECT b.event_type, b.k,
-         [[COALESCE(LEAD(b.st) OVER w, f.tl),
-           COALESCE(LEAD(b.sv) OVER w, f.vl),
-           COALESCE(LEAD(b.cnt) OVER w, 1)]] || b.cands AS enc
-  FROM bkt b JOIN firstlast f USING (event_type)
-  WINDOW w AS (PARTITION BY b.event_type ORDER BY b.k)
+cand AS MATERIALIZED (
+  SELECT i.event_type, i.k, i.tr, i.v,
+         COALESCE(nb.st, f.tl) AS st, COALESCE(nb.sv, f.vl) AS sv,
+         COALESCE(nb.cnt, 1) AS cnt
+  FROM interior i JOIN firstlast f USING (event_type)
+  LEFT JOIN bkt nb ON nb.event_type = i.event_type AND nb.k = i.k + 1
 ),
-folded AS (
-  SELECT b.event_type,
-         list_reduce(
-           [[[f.tf, f.vf]]] || list(b.enc ORDER BY b.k),
-           (acc, bb) -> list_append(acc,
-             list_reduce(
-               list_transform(bb[2:len(bb)], p ->
-                 [abs( (acc[len(acc)][1] * bb[1][3] - bb[1][1])
-                         * (p[2] - acc[len(acc)][2])
-                     - (acc[len(acc)][1] - p[1])
-                         * (bb[1][2] - acc[len(acc)][2] * bb[1][3]) ),
-                  p[1], p[2]]),
-               (x, y) -> CASE WHEN y[1] > x[1] THEN y ELSE x END
-             )[2:3])
-         ) || [[f.tl, f.vl]] AS sel
-  FROM bkt2 b JOIN firstlast f USING (event_type)
-  GROUP BY b.event_type, f.tf, f.vf, f.tl, f.vl
+-- One recursion step per bucket, argmax by ROW_NUMBER (earliest tr
+-- wins ties): a relational fold, since DuckDB 1.0 nested list lambdas
+-- that read the outer accumulator mix rows.
+pick(event_type, k, t, v) AS (
+  SELECT event_type, CAST(-1 AS BIGINT), tf, vf FROM firstlast
+  UNION ALL
+  SELECT event_type, k, tr, v FROM (
+    SELECT c.event_type, c.k, c.tr, c.v,
+           ROW_NUMBER() OVER (
+             PARTITION BY c.event_type
+             ORDER BY abs((p.t * c.cnt - c.st) * (c.v - p.v)
+                          - (p.t - c.tr) * (c.sv - p.v * c.cnt)) DESC,
+                      c.tr) AS r
+    FROM pick p JOIN cand c ON c.event_type = p.event_type AND c.k = p.k + 1
+  ) WHERE r = 1
 )
-SELECT fo.event_type,
-       CAST(t.i AS INTEGER) AS sel_rank,
-       fo.sel[t.i][1] + f.h0 AS t_hour,
-       fo.sel[t.i][2] AS v_scaled
-FROM folded fo JOIN firstlast f USING (event_type),
-     LATERAL unnest(range(1, len(fo.sel) + 1)) AS t(i)
+SELECT p.event_type,
+       CAST(ROW_NUMBER() OVER (PARTITION BY p.event_type ORDER BY p.k)
+            AS INTEGER) AS sel_rank,
+       p.t + f.h0 AS t_hour,
+       p.v AS v_scaled
+FROM (SELECT event_type, k, t, v FROM pick
+      UNION ALL SELECT event_type, beff, tl, vl FROM firstlast) p
+JOIN firstlast f USING (event_type)
 """,
 )
 def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:

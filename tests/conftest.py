@@ -48,3 +48,18 @@ def oracle_con(sf_dir):
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir) -> dict[str, str]:
+    """name -> formatted physical plan of every registered query, built
+    once for all registry-wide plan audits: building a query already
+    runs its eager checkpoints and collects, so each extra pass over
+    the 616 queries cost minutes."""
+    from spark_streaming_test_spark import registry
+    from spark_streaming_test_spark.plans import checks
+
+    return {
+        name: checks.formatted_plan(ent.fn(spark, sf_dir))
+        for name, ent in registry.all_queries().items()
+    }

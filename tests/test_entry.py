@@ -73,6 +73,70 @@ def test_bench_final_line_protocol():
     assert obj["calibration"] == cal
 
 
+def _slow_single_partition(spark, sf_dir):
+    """A 1-partition range aggregate whose one task sleeps 5 x 100 ms."""
+    from pyspark.sql import functions as F
+
+    return spark.range(0, 5, 1, 1).select(
+        "id",
+        F.expr("reflect('java.lang.Thread', 'sleep', CAST(100 AS BIGINT))")
+        .alias("z"),
+    ).agg(F.sum("id").alias("s"), F.count("z").alias("c"))
+
+
+def test_run_query_times_one_cold_run_and_the_repeats(spark):
+    import bench
+
+    calls = []
+
+    def fn(s, sf_dir):
+        calls.append(sf_dir)
+        return s.range(10)
+
+    cold, runs = bench.run_query(spark, "rq_count", fn, "sfdir", 2)
+    assert calls == ["sfdir"] * 3
+    assert isinstance(cold, float) and cold > 0
+    assert len(runs) == 2 and all(r > 0 for r in runs)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_hot_stages_reads_the_status_store_per_job_group(spark):
+    """A 1-task stage with >= 0.3 s executor time is reported for every
+    run of its own query, tagged with the run label, and never for
+    another job group or for jobs outside any group."""
+    import bench
+
+    bench.run_query(spark, "hot_mine", _slow_single_partition, "", 1)
+    bench.run_query(spark, "hot_other", _slow_single_partition, "", 1)
+    _slow_single_partition(spark, "").collect()  # no job group
+
+    mine = bench.hot_stages(spark, "hot_mine")
+    other = bench.hot_stages(spark, "hot_other")
+    assert [h["run"] for h in mine] == ["cold", "run1"]
+    assert [h["run"] for h in other] == ["cold", "run1"]
+    for h in mine + other:
+        assert h["tasks"] <= bench.HOT_MAX_TASKS
+        assert h["run_s"] >= bench.HOT_MIN_RUN_S
+    assert not {h["stage"] for h in mine} & {h["stage"] for h in other}
+    assert bench.hot_stages(spark, "never_ran") == []
+
+
+def test_scaling_probe_offsets_one_span_per_key_domain():
+    """Replica r shifts every column of a key domain by the same
+    r * span, so orders keep pointing at their replica's customers
+    even when max(o_custkey) < max(c_custkey)."""
+    from tools import scaling_probe
+
+    col_max = {c: 10 for cols in scaling_probe.KEY_DOMAINS.values() for c in cols}
+    col_max.update(c_custkey=999, o_custkey=500, user_id=149,
+                   o_orderkey=40, l_orderkey=41)
+    spans = scaling_probe.domain_spans(col_max)
+    assert spans["c_custkey"] == spans["o_custkey"] == spans["user_id"] == 1000
+    assert spans["o_orderkey"] == spans["l_orderkey"] == 42
+    assert spans["p_partkey"] == spans["l_partkey"] == 11
+    assert set(spans) == set(col_max)
+
+
 def test_docs_match_registry_counts():
     """README/COVERAGE query counts must equal the live registry.
 

@@ -29,10 +29,7 @@ reintroduces a single-partition sort is caught by name.
 
 from __future__ import annotations
 
-from spark_streaming_test_spark import registry
 from spark_streaming_test_spark.plans import checks
-
-from .conftest import TEST_SF_DIR
 
 # query name -> the documented bound of every non-auto-approved
 # single-partition funnel in its plan. "grain" = what one row of the
@@ -57,15 +54,12 @@ DOCUMENTED_FUNNELS: dict[str, str] = {
 }
 
 
-def test_no_unbounded_single_partition_funnels(spark):
+def test_no_unbounded_single_partition_funnels(registry_plans):
     """Every registered query's plan: each SinglePartition exchange is
     either bounded by construction or carries a documented grain."""
-    qs = registry.all_queries()
     undocumented: dict[str, list] = {}
     used: set[str] = set()
-    for name, ent in qs.items():
-        df = ent.fn(spark, TEST_SF_DIR)
-        plan = checks.formatted_plan(df)
+    for name, plan in registry_plans.items():
         bad = [f for f in checks.single_partition_funnels(plan) if not f["bounded"]]
         if not bad:
             continue

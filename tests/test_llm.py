@@ -528,6 +528,51 @@ def test_bpe_encode_no_cross_symbol_fusion(spark):
     assert row["toks"] == ["the", "r"], row["toks"]
 
 
+def _bpe_sequential(words: dict[str, int], n_merges: int) -> list[dict]:
+    """Plain one-merge-per-step BPE over the same separator-wrapped,
+    twice-applied whole-symbol rewrite as bpe_train, no lookahead."""
+    from collections import Counter
+
+    from spark_streaming_test_spark.llm import bpe
+
+    sep = bpe.SEP
+    syms = {sep.join(w): n for w, n in words.items()}
+    merges = []
+    for it in range(n_merges):
+        pairs: Counter = Counter()
+        for s, n in syms.items():
+            toks = s.split(sep)
+            for lr in zip(toks, toks[1:]):
+                pairs[lr] += n
+        if not pairs:
+            break
+        (l, r), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append({"iteration": it, "left": l, "right": r,
+                       "merged": l + r, "pair_count": cnt})
+        pat, rep = sep + l + sep + r + sep, sep + l + r + sep
+        syms = {
+            (sep + s + sep).replace(pat, rep).replace(pat, rep).strip(sep): n
+            for s, n in syms.items()
+        }
+    return merges
+
+
+def test_bpe_lookahead_skips_self_merge(spark):
+    """W x 'aaa' + M x 'bc' with M < W: merge 1 is the self-merge
+    (a, a) at 2W, which turns 'aaa' into [aa, a] and mints (aa, a) at
+    W > M. The runner-up (b, c) is disjoint from {a}, so the lookahead
+    must still refuse it: the merge table equals the sequential one."""
+    from spark_streaming_test_spark.llm import bpe
+
+    corpus = {"aaa": 5, "bc": 3}
+    words = spark.createDataFrame(list(corpus.items()), "word string, n bigint")
+    want = _bpe_sequential(corpus, 3)
+    assert [(m["left"], m["right"]) for m in want[:2]] == [
+        ("a", "a"), ("aa", "a")
+    ]
+    assert bpe.bpe_train(words, n_merges=3) == want
+
+
 def test_bpe_train_deterministic_under_partitioning(spark):
     from spark_streaming_test_spark.llm import bpe
 

@@ -27,10 +27,7 @@ automatically retires its entry and a regression is caught by name.
 
 from __future__ import annotations
 
-from spark_streaming_test_spark import registry
 from spark_streaming_test_spark.plans import checks
-
-from .conftest import TEST_SF_DIR
 
 # query name -> the documented bound of every non-auto-approved
 # nested-loop build side in its plan. The recurring shapes:
@@ -191,19 +188,15 @@ DOCUMENTED_PYTHON_EVAL: dict[str, tuple[tuple[str, ...], str]] = {
 }
 
 
-def test_no_undocumented_nested_loops_or_python_eval(spark):
+def test_no_undocumented_nested_loops_or_python_eval(registry_plans):
     """One registry sweep, both audits: every CartesianProduct/BNLJ
     build is bounded-by-plan or documented; every Python-eval node set
     matches its documented entry exactly; stale entries fail."""
-    qs = registry.all_queries()
     bad_join: dict[str, list] = {}
     bad_py: dict[str, tuple] = {}
     used_join: set[str] = set()
     used_py: set[str] = set()
-    for name, ent in qs.items():
-        df = ent.fn(spark, TEST_SF_DIR)
-        plan = checks.formatted_plan(df)
-
+    for name, plan in registry_plans.items():
         unbounded = [
             j for j in checks.nested_loop_joins(plan) if not j["bounded"]
         ]

@@ -1160,13 +1160,45 @@ def test_unicode_nfc_folds_encoding_forms(spark, sf_dir):
 # --- LTTB downsampling ---------------------------------------------------------
 
 
-def test_lttb_python_replay(spark, sf_dir):
-    """Selected points must equal a pure-Python replay of textbook LTTB
-    (Steinarsson 2013) on the same hourly series — previous-point
-    dependence, next-bucket centroid, earliest-tie argmax — and the
-    endpoints must always be kept verbatim."""
+def _lttb_twin(pts, B):
+    """Textbook LTTB (Steinarsson 2013) over one hourly series of
+    (h, v) points: previous-point dependence, next-bucket centroid,
+    earliest-tie argmax, endpoints kept verbatim."""
     import math
 
+    pts = sorted(pts)
+    n = len(pts)
+    h0 = pts[0][0]
+    rel = [(h - h0, v) for h, v in pts]
+    beff = min(B, n - 2)
+    sel = [rel[0]]
+    buckets = [[] for _ in range(beff)]
+    for idx in range(1, n - 1):
+        k = int(math.floor(((idx - 1) * beff) / float(n - 2)))
+        buckets[k].append(rel[idx])
+    for k in range(beff):
+        if k + 1 < beff:
+            nxt = buckets[k + 1]
+            st = sum(t for t, _ in nxt)
+            sv = sum(v for _, v in nxt)
+            cnt = len(nxt)
+        else:
+            st, sv, cnt = rel[-1][0], rel[-1][1], 1
+        ta, va = sel[-1]
+        best = None
+        for tp, vp in buckets[k]:
+            a2 = abs((ta * cnt - st) * (vp - va) - (ta - tp) * (sv - va * cnt))
+            if best is None or a2 > best[0]:
+                best = (a2, tp, vp)
+        sel.append((best[1], best[2]))
+    sel.append(rel[-1])
+    return [(t + h0, v) for t, v in sel]
+
+
+def test_lttb_python_replay(spark, sf_dir):
+    """Selected points must equal a pure-Python replay of textbook LTTB
+    on the same hourly series, and the endpoints must always be kept
+    verbatim."""
     from pyspark.sql import functions as F
 
     from spark_streaming_test_spark.operators import timeseries as tsm
@@ -1190,34 +1222,6 @@ def test_lttb_python_replay(spark, sf_dir):
     for s in series.values():
         s.sort()
 
-    def lttb(pts, B):
-        n = len(pts)
-        h0 = pts[0][0]
-        rel = [(h - h0, v) for h, v in pts]
-        beff = min(B, n - 2)
-        sel = [rel[0]]
-        buckets = [[] for _ in range(beff)]
-        for idx in range(1, n - 1):
-            k = int(math.floor(((idx - 1) * beff) / float(n - 2)))
-            buckets[k].append(rel[idx])
-        for k in range(beff):
-            if k + 1 < beff:
-                nxt = buckets[k + 1]
-                st = sum(t for t, _ in nxt)
-                sv = sum(v for _, v in nxt)
-                cnt = len(nxt)
-            else:
-                st, sv, cnt = rel[-1][0], rel[-1][1], 1
-            ta, va = sel[-1]
-            best = None
-            for tp, vp in buckets[k]:
-                a2 = abs((ta * cnt - st) * (vp - va) - (ta - tp) * (sv - va * cnt))
-                if best is None or a2 > best[0]:
-                    best = (a2, tp, vp)
-            sel.append((best[1], best[2]))
-        sel.append(rel[-1])
-        return [(t + h0, v) for t, v in sel]
-
     got = defaultdict(dict)
     for r in tsm.ts_lttb_downsample(spark, sf_dir).collect():
         got[r["event_type"]][r["sel_rank"]] = (r["t_hour"], r["v_scaled"])
@@ -1225,10 +1229,38 @@ def test_lttb_python_replay(spark, sf_dir):
     for et, pts in series.items():
         if len(pts) < 3:
             continue
-        want = lttb(pts, tsm.LTTB_B)
+        want = _lttb_twin(pts, tsm.LTTB_B)
         ranked = [got[et][i] for i in sorted(got[et])]
         assert ranked == want, et
         assert ranked[0] == pts[0] and ranked[-1] == pts[-1]
+
+
+def test_lttb_oracle_python_replay(oracle_con):
+    """The DuckDB oracle, row by row, against the same Python twin.
+    DuckDB 1.0 nested list lambdas that read the outer fold state mixed
+    rows (20 wrong rows at sf0.001, an INT64 overflow at sf0.01), so the
+    aggregate hash alone cannot vouch for the oracle."""
+    from spark_streaming_test_spark.operators import timeseries as tsm
+    from spark_streaming_test_spark.registry import all_queries
+
+    series = defaultdict(list)
+    for et, h, v in oracle_con.execute(
+        "SELECT event_type, CAST(floor(epoch(ts) / 3600) AS BIGINT),"
+        " CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT)"
+        " FROM events GROUP BY 1, 2"
+    ).fetchall():
+        series[et].append((h, v))
+    want = sorted(
+        (et, rank, t, v)
+        for et, pts in series.items()
+        if len(pts) >= 3
+        for rank, (t, v) in enumerate(_lttb_twin(pts, tsm.LTTB_B), 1)
+    )
+    oracle = all_queries()["ts_lttb_downsample"].oracle
+    got = sorted(oracle_con.execute(oracle).fetchall())
+    assert len(got) == len(want)
+    bad = [(g, w) for g, w in zip(got, want) if g != w]
+    assert not bad, bad[:5]
 
 
 # --- tar / WebDataset source ---------------------------------------------------

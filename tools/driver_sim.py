@@ -29,7 +29,10 @@ import duckdb  # noqa: E402
 
 from spark_streaming_test_spark.catalog import TABLES  # noqa: E402
 from spark_streaming_test_spark.registry import all_queries  # noqa: E402
-from spark_streaming_test_spark.session import get_spark  # noqa: E402
+from spark_streaming_test_spark.session import (  # noqa: E402
+    get_spark,
+    reset_query_state,
+)
 from tests.compare import assert_match  # noqa: E402
 
 
@@ -77,9 +80,9 @@ def main() -> int:
         # Long sweeps at bigger SFs OOMed the default 1g driver heap
         # around query ~75: persisted blocks (pagerank edge indexes,
         # checkpointed BPE frames, ...) accumulate across queries that
-        # each fit comfortably alone. Drop them between queries — this
-        # is a correctness harness, not a benchmark.
-        spark.catalog.clearCache()
+        # each fit comfortably alone. Drop them between queries, with
+        # the localCheckpoint blocks and frame caches clearCache misses.
+        reset_query_state(spark)
 
     print(f"\n{len(picked) - len(failures)}/{len(picked)} green"
           + (f"; FAILURES: {failures}" if failures else ""))

@@ -7,15 +7,17 @@ cost dominates, so every cohort runs FASTER at 8 cores than 32
 queries at a grain where compute dominates:
 
 1. ``generate``: build a REPLICAS x sf0.1 dataset under --dir by
-   unioning key-offset copies of each table (ids shifted per replica so
-   joins/graphs become R disjoint copies of the sf0.1 structure — the
-   co-purchase projection cannot densify, per-user series keep their
-   length, join fan-outs replicate instead of exploding). This is a
+   unioning key-offset copies of each table (ids shifted per replica,
+   one offset per key domain, so joins/graphs become R disjoint copies
+   of the sf0.1 structure — the co-purchase projection cannot densify,
+   per-user series keep their length, join fan-outs replicate instead
+   of exploding). This is a
    MEASUREMENT fixture only: no oracle runs against it and no query
    path reads it outside this tool.
 2. ``run``: in THIS process (launch once per core count via
-   $SPARK_GRAFT_CPUS), noop-time the probe cohort (1 warm-up + 2
-   repeats, median) and append one JSON line to --out.
+   $SPARK_GRAFT_CPUS), noop-time the probe cohort with the bench's
+   ``run_query`` (1 cold run + $SPARK_GRAFT_BENCH_REPEATS repeats,
+   default 3, median) and append one JSON line to --out.
 
 Usage (two fresh processes per the bench's own discipline):
 
@@ -41,17 +43,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPLICAS = 10
 SRC = "/root/testdata/sf0.1"
 
-# Per-table integer key columns to offset per replica (disjoint copies).
-OFFSET_KEYS = {
-    "embeddings": ["vec_id"],
-    "documents": ["doc_id"],
-    "events": ["event_id", "user_id"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
-    "part": ["p_partkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
+# Key domains: every integer key column that holds one kind of key. A
+# replica shifts all columns of a domain by the SAME offset, so replica
+# orders reference replica customers and replica lineitems reference
+# replica orders, parts and suppliers. events.user_id joins customers
+# and orders (join_asof, the streaming enrich oracle), so it is a
+# custkey. region/nation keys stay as-is.
+KEY_DOMAINS = {
+    "custkey": ["c_custkey", "o_custkey", "user_id"],
+    "orderkey": ["o_orderkey", "l_orderkey"],
+    "partkey": ["p_partkey", "l_partkey"],
+    "suppkey": ["s_suppkey", "l_suppkey"],
+    "vec_id": ["vec_id"],
+    "doc_id": ["doc_id"],
+    "event_id": ["event_id"],
 }
+
+
+def domain_spans(col_max: dict[str, int]) -> dict[str, int]:
+    """Per-column replica offset step: one more than the max over every
+    column of the column's key domain."""
+    return {
+        c: max(col_max[k] for k in cols) + 1
+        for cols in KEY_DOMAINS.values()
+        for c in cols
+    }
+
 
 # Compute-heavy cohort: the heavy-tail bench cohort plus the heaviest
 # sweep finds — the queries whose 100 TB posture the round argues for.
@@ -76,20 +93,24 @@ def generate(out_dir: str) -> None:
     from spark_streaming_test_spark.session import get_spark
 
     spark = get_spark("scaling-probe-gen")
+    key_cols = {c for cols in KEY_DOMAINS.values() for c in cols}
+    tables = {name: load(spark, SRC, name) for name in TABLES}
+    col_max: dict[str, int] = {}
+    for base in tables.values():
+        keys = [c for c in base.columns if c in key_cols]
+        if keys:
+            row = base.agg(*[F.max(c).alias(c) for c in keys]).collect()[0]
+            col_max.update({c: int(row[c]) for c in keys})
+    spans = domain_spans(col_max)
     os.makedirs(out_dir, exist_ok=True)
-    for name in TABLES:
-        base = load(spark, SRC, name)
-        keys = OFFSET_KEYS.get(name)
+    for name, base in tables.items():
+        keys = [c for c in base.columns if c in spans]
         if not keys:
             # dimension-like tables (region, nation) stay as-is
             base.write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"{name}.parquet")
             )
             continue
-        spans = {
-            k: int(base.agg(F.max(F.col(k))).collect()[0][0]) + 1
-            for k in keys
-        }
         parts = []
         for r in range(REPLICAS):
             rep = base
@@ -108,39 +129,24 @@ def generate(out_dir: str) -> None:
 
 
 def run(data_dir: str, out_path: str) -> None:
+    from bench import REPEATS, median, run_query
     from spark_streaming_test_spark import registry
     from spark_streaming_test_spark.session import (
         default_parallelism,
         get_spark,
-        reset_query_state,
     )
 
     spark = get_spark("scaling-probe")
     qs = registry.queries()
     timings: dict[str, float] = {}
     for name in PROBE:
-        fn = qs[name]
         try:
-            fn(spark, data_dir).write.format("noop").mode("overwrite").save()
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, data_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
-            timings[name] = sorted(runs)[0] if len(runs) == 1 else round(
-                sum(runs) / len(runs), 3
-            )
-            reset_query_state(spark)
+            _, runs = run_query(spark, name, qs[name], data_dir, REPEATS)
+            timings[name] = median(runs)
             print(f"{timings[name]:8.2f}s {name}", flush=True)
         except Exception as e:
             timings[name] = -1.0
             print(f"ERR {name}: {str(e)[:120]}", flush=True)
-            try:
-                reset_query_state(spark)
-            except Exception:
-                pass
     rec = {
         "cpus": default_parallelism(),
         "replicas": REPLICAS,
