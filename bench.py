@@ -19,6 +19,7 @@ from __future__ import annotations
 import itertools
 import json
 import os
+import re
 import sys
 import time
 
@@ -210,6 +211,22 @@ REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
 HOT_MAX_TASKS = 2
 HOT_MIN_RUN_S = 0.3
 
+# SQL metrics of the Python-runner plan nodes (ArrowEvalPython,
+# MapInPandas, FlatMapGroupsInPandas, ...) that hot_stages reports per
+# stage. Per-task Python worker set-up shows in the first; on a reused
+# worker Spark also counts there the wait since its previous task.
+PY_METRICS = {
+    "time to initialize Python workers": "py_init_ms",
+    "time to run Python workers": "py_run_ms",
+}
+# The SQL status store keeps a timing metric only as rendered text:
+# "127 ms" when one task reported it, else "total (min, med, max
+# (stageId: taskId))\n1.2 s (80 ms, 95 ms, 410 ms (stage 7.0: task 31))",
+# the total followed by the stage of the slowest task.
+_TIMING = re.compile(
+    r"([\d.]+) (ms|s|m|h)(?: \(.*\(stage (\d+)\.\d+: task \d+\)\))?$")
+_MS_PER_UNIT = {"ms": 1, "s": 1e3, "m": 6e4, "h": 3.6e6}
+
 
 def median(runs: list[float]) -> float:
     return sorted(runs)[len(runs) // 2]
@@ -244,12 +261,75 @@ def run_query(spark, name: str, fn, sf_dir: str, repeats: int):
     return cold, runs
 
 
+def _scala_iter(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _stage(store, sid: int):
+    """The stage's last attempt, or None once the store has evicted it
+    (past spark.ui.retainedStages, long iterative queries)."""
+    try:
+        return store.lastStageAttempt(sid)
+    except Py4JJavaError as e:
+        if "NoSuchElementException" not in str(e.java_exception):
+            raise
+        return None
+
+
+def _metric_stage(store, execution, tagged: str | None) -> int | None:
+    """The stage a rendered SQL metric belongs to: the stage it names,
+    else (one task reported it) the execution's only one-task stage."""
+    if tagged is not None:
+        return int(tagged)
+    one_task = [
+        sid for sid in _scala_iter(execution.stages())
+        if (st := _stage(store, sid)) is not None and st.numCompleteTasks() == 1
+    ]
+    return one_task[0] if len(one_task) == 1 else None
+
+
+def python_worker_ms(spark, job: int, stage: int) -> dict[str, float]:
+    """``py_init_ms`` and ``py_run_ms`` (PY_METRICS) of one stage of
+    ``job``, 0 where it ran no Python.
+
+    Read from the SQL status store, which like the core one works with
+    the UI off; the core store's stage accumulables leave SQL metrics
+    out. It keeps totals as rendered text, so one of 1 s or more is
+    known to 0.1 s, and a one-task total in an execution with several
+    one-task stages cannot be placed (it counts for none)."""
+    out = dict.fromkeys(PY_METRICS.values(), 0.0)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    execution_id = store.jobWithAssociatedSql(job)._2()
+    if execution_id.isEmpty():
+        return out
+    sql = spark._jsparkSession.sharedState().statusStore()
+    execution = sql.execution(execution_id.get())
+    if execution.isEmpty():
+        return out
+    values = sql.executionMetrics(execution_id.get())
+    for metric in _scala_iter(execution.get().metrics()):
+        key = PY_METRICS.get(metric.name())
+        value = values.get(metric.accumulatorId()) if key else None
+        if value is None or value.isEmpty():
+            continue
+        hit = _TIMING.search(value.get())
+        if hit and _metric_stage(store, execution.get(), hit[3]) == stage:
+            out[key] += round(float(hit[1]) * _MS_PER_UNIT[hit[2]], 1)
+    return out
+
+
 def hot_stages(spark, name: str) -> list[dict]:
     """Hot single-task stages of run_query's runs of ``name``, each
-    tagged with its run label, read from Spark's in-process status
-    store (works with the UI disabled): job group -> job ids -> stage
-    ids -> the stage's last attempt."""
+    tagged with its run label and its Python worker time
+    (python_worker_ms), read from Spark's in-process status store
+    (works with the UI disabled): job group -> job ids -> stage ids ->
+    the stage's last attempt."""
     sc = spark.sparkContext
+    # Listeners fill both status stores asynchronously: without this a
+    # call right after a run could miss its stages' SQL metrics.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
     hot, seen = [], set()
@@ -264,15 +344,8 @@ def hot_stages(spark, name: str) -> list[dict]:
                 if sid in seen:
                     continue
                 seen.add(sid)
-                try:
-                    s = store.lastStageAttempt(sid)
-                except Py4JJavaError as e:
-                    # evicted past spark.ui.retainedStages (long
-                    # iterative queries): nothing left to read
-                    if "NoSuchElementException" not in str(e.java_exception):
-                        raise
-                    continue
-                if (str(s.status()) == "COMPLETE"
+                s = _stage(store, sid)
+                if (s is not None and str(s.status()) == "COMPLETE"
                         and s.numCompleteTasks() <= HOT_MAX_TASKS
                         and s.executorRunTime() >= HOT_MIN_RUN_S * 1000):
                     hot.append({
@@ -282,6 +355,7 @@ def hot_stages(spark, name: str) -> list[dict]:
                         "run_s": round(s.executorRunTime() / 1000, 3),
                         "input_mb": s.inputBytes() >> 20,
                         "shuffle_read_kb": s.shuffleReadBytes() >> 10,
+                        **python_worker_ms(spark, job, sid),
                         "name": s.name()[:80],
                     })
     return hot

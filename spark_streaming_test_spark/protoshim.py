@@ -50,11 +50,9 @@ def ensure_protobuf() -> bool:
         sys.path.insert(0, VENDOR_DIR)
     # Workers (forked from the JVM's python daemon) resolve imports via
     # PYTHONPATH, not this process's sys.path.
-    parts = os.environ.get("PYTHONPATH", "")
-    if VENDOR_DIR not in parts.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            VENDOR_DIR + (os.pathsep + parts if parts else "")
-        )
+    from spark_streaming_test_spark.session import add_worker_path
+
+    add_worker_path(VENDOR_DIR)
     # A failed `import google.protobuf` attempt may have cached a
     # namespace-package 'google' (e.g. from an empty real dir) — retry
     # cleanly.

@@ -15,6 +15,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The directory that holds this package. get_spark puts it on the Python
+# workers' path: the worker daemon and executor-side imports (the Kafka
+# sink's ``foreachPartition``) must not depend on the JVM's cwd.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def add_worker_path(path: str) -> None:
+    """Prepend ``path`` to ``PYTHONPATH`` unless it is there already.
+
+    Python workers inherit ``PYTHONPATH`` from the JVM, which copies
+    this process's environment when the gateway launches, so this only
+    reaches workers when it runs before the first session."""
+    parts = os.environ.get("PYTHONPATH", "")
+    if path not in parts.split(os.pathsep):
+        os.environ["PYTHONPATH"] = path + (os.pathsep + parts if parts else "")
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -23,10 +40,13 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
     # Before the JVM launches: make google.protobuf importable (vendored
     # shim if the real wheel is absent) so transformWithStateInPandas
-    # workers can speak the state-server protocol. No-op afterwards.
+    # workers can speak the state-server protocol, and make this package
+    # importable by every worker, which the worker daemon below needs.
+    # No-op afterwards.
     from spark_streaming_test_spark.protoshim import ensure_protobuf
 
     ensure_protobuf()
+    add_worker_path(PACKAGE_ROOT)
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -51,6 +71,12 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        # Python workers fork from worker_daemon, which stops every task
+        # from re-reading the indexes of pyspark.zip and the spark-core
+        # jar (~220 ms per task on Python 3.11).
+        .config("spark.python.daemon.module",
+                "spark_streaming_test_spark.worker_daemon")
     )
     if "SPARK_GRAFT_DRIVER_MEMORY" in os.environ:
         builder = builder.config(

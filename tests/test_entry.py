@@ -84,6 +84,19 @@ def _slow_single_partition(spark, sf_dir):
     ).agg(F.sum("id").alias("s"), F.count("z").alias("c"))
 
 
+def _slow_python_single_partition(spark, sf_dir):
+    """A 1-partition mapInPandas whose one Python task sleeps 400 ms."""
+
+    def slow(batches):
+        import time
+
+        for pdf in batches:
+            time.sleep(0.4)
+            yield pdf
+
+    return spark.range(0, 5, 1, 1).mapInPandas(slow, "id long")
+
+
 def test_run_query_times_one_cold_run_and_the_repeats(spark):
     import bench
 
@@ -102,22 +115,32 @@ def test_run_query_times_one_cold_run_and_the_repeats(spark):
 
 def test_hot_stages_reads_the_status_store_per_job_group(spark):
     """A 1-task stage with >= 0.3 s executor time is reported for every
-    run of its own query, tagged with the run label, and never for
-    another job group or for jobs outside any group."""
+    run of its own query, tagged with the run label and its Python
+    worker time, and never for another job group or for jobs outside
+    any group."""
     import bench
 
     bench.run_query(spark, "hot_mine", _slow_single_partition, "", 1)
     bench.run_query(spark, "hot_other", _slow_single_partition, "", 1)
+    bench.run_query(spark, "hot_py", _slow_python_single_partition, "", 1)
     _slow_single_partition(spark, "").collect()  # no job group
 
     mine = bench.hot_stages(spark, "hot_mine")
     other = bench.hot_stages(spark, "hot_other")
+    py = bench.hot_stages(spark, "hot_py")
     assert [h["run"] for h in mine] == ["cold", "run1"]
     assert [h["run"] for h in other] == ["cold", "run1"]
-    for h in mine + other:
+    assert [h["run"] for h in py] == ["cold", "run1"]
+    for h in mine + other + py:
         assert h["tasks"] <= bench.HOT_MAX_TASKS
         assert h["run_s"] >= bench.HOT_MIN_RUN_S
     assert not {h["stage"] for h in mine} & {h["stage"] for h in other}
+    # Python worker time is the Python stage's own, read with the UI off
+    for h in mine + other:
+        assert h["py_init_ms"] == h["py_run_ms"] == 0
+    for h in py:
+        assert h["py_run_ms"] >= 400
+        assert h["py_init_ms"] >= 0
     assert bench.hot_stages(spark, "never_ran") == []
 
 

@@ -13,8 +13,10 @@ registered paths.
 
 Output: one JSON line per query appended to ``--out`` (default
 ``plans/r14/single_task_sweep.jsonl``) with the timed run's wall and
-any hot single-task stages (each tagged with the run that produced
-it), plus a final summary line. An unknown or failing query becomes an
+any hot single-task stages (each tagged with the run that produced it
+and with its Python worker time, ``py_init_ms`` and ``py_run_ms``, so
+a per-task Python set-up floor shows without an event log), plus a
+final summary line. An unknown or failing query becomes an
 ``err`` line and the sweep goes on.
 
 Usage::
