@@ -101,6 +101,15 @@ def ml_logreg_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration's partial aggregate onto one core, and every iteration
     # re-read the parquet; now LR_ITERS iterations scan one
     # slot-parallel checkpointed frame.
+    # The checkpoint is corpus-sized on purpose: full-batch gradient
+    # descent reads every row in every iteration, so the iterative
+    # state IS the projected events (3 doubles per row, ~2.4 MB raw
+    # per 100k events), and a cap would change the gradient. Its
+    # lifetime is this query: no cross-query cache holds the frame, so
+    # a harness reset_query_state releases its blocks and the next
+    # call checkpoints afresh. Executor-loss tradeoff (as in graph's
+    # _edge_index): a block lost with its executor fails the query
+    # instead of recomputing from the parquet; the retry rebuilds it.
     feat = (
         spread(load(spark, sf_dir, "events"))
         .select(
@@ -2087,6 +2096,13 @@ def ml_em_gmm_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread + one materialization (optimization r14, guide §2.5/§5):
     # the single-file scan fused each EM iteration's M-step partial
     # aggregate onto one core and re-read the parquet per iteration.
+    # Corpus-sized on purpose, like ml_logreg_train_gd's: every EM step
+    # reads all of x (one double per event row, ~0.8 MB raw per 100k
+    # events), so x is the iterative state; only the 1-row params frame
+    # changes. The checkpoint lives for this query (no cross-query
+    # cache holds it; reset_query_state releases it), and a block lost
+    # with its executor fails the query instead of recomputing from
+    # the parquet; the retry rebuilds it.
     data = (
         spread(load(spark, sf_dir, "events"))
         .selectExpr(_EM_X)

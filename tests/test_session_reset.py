@@ -18,6 +18,11 @@ DataFrame-holding cache is registered.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from pyspark import StorageLevel
 
 from spark_streaming_test_spark import session as sess
@@ -103,3 +108,37 @@ def test_all_dataframe_caches_are_registered():
     assert not unregistered, (
         f"module-level frame caches not registered for reset: {unregistered}"
     )
+
+
+_QUIET_RESET_SCRIPT = textwrap.dedent(
+    """
+    import sys
+    sys.path.insert(0, sys.argv[1])
+    from spark_streaming_test_spark.session import get_spark, reset_query_state
+
+    spark = get_spark("quiet-reset")
+    spark.range(100).localCheckpoint(eager=True)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 1
+    reset_query_state(spark)
+    root = spark._jvm.org.apache.logging.log4j.LogManager.getRootLogger()
+    print("RESULT", spark.sparkContext._jsc.getPersistentRDDs().size(),
+          root.getLevel().name())
+    spark.stop()
+    """
+)
+
+
+def test_reset_does_not_log_checkpointed_unpersists():
+    """reset_query_state unpersists localCheckpointed RDDs on purpose,
+    so Spark's per-RDD "lineage has been truncated" WARN is muted for
+    that loop only: the JVM's stderr shows none, the blocks are gone,
+    and the root log level is WARN again afterwards."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _QUIET_RESET_SCRIPT, repo],
+        env=dict(os.environ, SPARK_GRAFT_CPUS="1"),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "RESULT 0 WARN" in proc.stdout, proc.stdout
+    assert "was locally checkpointed" not in proc.stderr, proc.stderr[-3000:]

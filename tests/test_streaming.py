@@ -5,6 +5,9 @@ streaming windowed agg == batch equivalent; custom packet DataSource."""
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
+import sys
 import time
 from contextlib import contextmanager
 
@@ -2340,3 +2343,148 @@ def test_streaming_incremental_substring_index(spark, tmp_path):
     toks = fresh_text.split()
     want |= {" ".join(toks[i : i + SUBSTR_L]) for i in range(n3)}
     assert idx_grams == want
+
+
+# --- checkpoint file manager: fork floor and the properties it keeps ----------
+
+_FORK_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+src, chk, log = sys.argv[2:5]
+import os
+from datetime import datetime
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
+
+from spark_streaming_test_spark.session import get_spark
+from spark_streaming_test_spark.streaming.pipeline import (
+    edge_trigger_stream,
+    packet_stream_from_dir,
+)
+
+spark = get_spark("checkpoint-forks")
+os.makedirs(src)
+packets = packet_stream_from_dir(spark, src)
+totals = packets.select("nif", F.col("bytes").alias("total_bytes"))
+q = (
+    edge_trigger_stream(totals, max_limit=150.0)
+    .writeStream.foreachBatch(lambda df, _bid: df.collect())
+    .option("checkpointLocation", chk)
+    .start()
+)
+for i, nbytes in enumerate([200.0, 220.0, 80.0, 400.0]):
+    table = pa.table({
+        "nif": ["A", "B"],
+        "bytes": [nbytes, 300.0 - nbytes],
+        "ts": pa.array([datetime(2024, 1, 1, 0, i)] * 2, type=pa.timestamp("us")),
+    })
+    pq.write_table(table, f"{src}/b{i}.parquet")
+    q.processAllAvailable()
+    with open(log, "a") as f:
+        f.write(f"batch {i}\\n")
+print("BATCHES", q.lastProgress["batchId"] + 1)
+q.stop()
+spark.stop()
+"""
+
+
+def test_checkpoint_writes_fork_no_readlink(tmp_path):
+    """Without libhadoop, Hadoop's local FileContext forks a `readlink`
+    for every getFileLinkStatus (56 per micro-batch at 2 state
+    partitions through the default checkpoint manager); the session's
+    FileSystem-based manager forks none. Shims first on the JVM's PATH
+    log every `readlink` and `chmod` it starts; batches after the first
+    must start no readlink."""
+    real = {cmd: shutil.which(cmd) for cmd in ("readlink", "chmod")}
+    if None in real.values():
+        pytest.skip("no readlink/chmod binary on PATH")
+    log = tmp_path / "forks.log"
+    shims = tmp_path / "bin"
+    shims.mkdir()
+    for cmd, path in real.items():
+        shim = shims / cmd
+        shim.write_text(f'#!/bin/sh\necho {cmd} >> "{log}"\nexec "{path}" "$@"\n')
+        shim.chmod(0o755)
+    script = tmp_path / "forks.py"
+    script.write_text(_FORK_SCRIPT)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2")
+    env["PATH"] = f"{shims}{os.pathsep}{env['PATH']}"
+    proc = subprocess.run(
+        [sys.executable, str(script), repo, str(tmp_path / "in"),
+         str(tmp_path / "chk"), str(log)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "BATCHES 4" in proc.stdout, proc.stdout
+    # One count per batch: the lines logged since the previous marker.
+    per_batch, counts = [], {"readlink": 0, "chmod": 0}
+    for line in log.read_text().split("\n"):
+        if line.startswith("batch "):
+            per_batch.append(counts)
+            counts = {"readlink": 0, "chmod": 0}
+        elif line:
+            counts[line] += 1
+    assert len(per_batch) == 4
+    forks = ", ".join(
+        f"batch {i}: {c['readlink']} readlink / {c['chmod']} chmod"
+        for i, c in enumerate(per_batch)
+    )
+    assert all(c["readlink"] == 0 for c in per_batch[1:]), forks
+
+
+def test_checkpoint_manager_keeps_atomic_logs_and_checksums(spark, tmp_path):
+    """What the session's checkpoint file manager must keep of the
+    default one: a second writer of an existing log entry fails with
+    Hadoop's FileAlreadyExistsException (HDFSMetadataLog's concurrent-
+    writer guard catches that class), and every log entry and state
+    delta keeps its Hadoop .crc sidecar and Spark's delta checksum."""
+    import glob as _glob
+
+    from py4j.protocol import Py4JJavaError
+
+    src = str(tmp_path / "in")
+    chk = str(tmp_path / "chk")
+    _write_packet_batch(spark, src, [("A", 200.0, _ts(0))], 0)
+    packets = packet_stream_from_dir(spark, src)
+    totals = packets.select("nif", F.col("bytes").alias("total_bytes"))
+    q = (
+        edge_trigger_stream(totals, max_limit=150.0)
+        .writeStream.foreachBatch(lambda df, _bid: df.collect())
+        .option("checkpointLocation", chk)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        _write_packet_batch(spark, src, [("A", 220.0, _ts(1))], 1)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(f"file://{chk}/offsets/0")
+    mgr = (
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(path.getParent(), hadoop_conf)
+    )
+    before = open(f"{chk}/offsets/0").read()
+    with pytest.raises(Py4JJavaError) as err:
+        mgr.createAtomic(path, False).close()
+    exists_cls = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException"
+    )
+    assert exists_cls.isInstance(err.value.java_exception), str(err.value)
+    assert open(f"{chk}/offsets/0").read() == before
+
+    entries = [f"{chk}/{log}/{n}" for log in ("offsets", "commits") for n in (0, 1)]
+    deltas = sorted(_glob.glob(f"{chk}/state/0/*/*.delta"))
+    assert deltas, os.listdir(chk)
+    for f in entries + deltas:
+        assert os.path.exists(f), f
+        d, name = os.path.split(f)
+        assert os.path.exists(f"{d}/.{name}.crc"), f"no Hadoop .crc for {f}"
+    for f in deltas:
+        assert os.path.exists(f"{f}.crc"), f"no Spark checksum for {f}"
