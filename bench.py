@@ -320,19 +320,21 @@ def python_worker_ms(spark, job: int, stage: int) -> dict[str, float]:
     return out
 
 
-def hot_stages(spark, name: str) -> list[dict]:
+def hot_stages(spark, name: str) -> tuple[list[dict], int]:
     """Hot single-task stages of run_query's runs of ``name``, each
     tagged with its run label and its Python worker time
     (python_worker_ms), read from Spark's in-process status store
     (works with the UI disabled): job group -> job ids -> stage ids ->
-    the stage's last attempt."""
+    the stage's last attempt. Also returns how many of the runs' stage
+    ids the store had already evicted (past spark.ui.retainedStages),
+    which it cannot read."""
     sc = spark.sparkContext
     # Listeners fill both status stores asynchronously: without this a
     # call right after a run could miss its stages' SQL metrics.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
-    hot, seen = [], set()
+    hot, seen, evicted = [], set(), 0
     for i in itertools.count():
         label = f"run{i}" if i else "cold"
         jobs = tracker.getJobIdsForGroup(f"{name}#{label}")
@@ -345,7 +347,9 @@ def hot_stages(spark, name: str) -> list[dict]:
                     continue
                 seen.add(sid)
                 s = _stage(store, sid)
-                if (s is not None and str(s.status()) == "COMPLETE"
+                if s is None:
+                    evicted += 1
+                elif (str(s.status()) == "COMPLETE"
                         and s.numCompleteTasks() <= HOT_MAX_TASKS
                         and s.executorRunTime() >= HOT_MIN_RUN_S * 1000):
                     hot.append({
@@ -358,7 +362,7 @@ def hot_stages(spark, name: str) -> list[dict]:
                         **python_worker_ms(spark, job, sid),
                         "name": s.name()[:80],
                     })
-    return hot
+    return hot, evicted
 
 
 def main() -> None:

@@ -38,14 +38,8 @@ def default_parallelism() -> int:
 
 def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
-    # Before the JVM launches: make google.protobuf importable (vendored
-    # shim if the real wheel is absent) so transformWithStateInPandas
-    # workers can speak the state-server protocol, and make this package
-    # importable by every worker, which the worker daemon below needs.
-    # No-op afterwards.
-    from spark_streaming_test_spark.protoshim import ensure_protobuf
-
-    ensure_protobuf()
+    # Before the JVM launches: make this package importable by every
+    # worker, which the worker daemon below needs. No-op afterwards.
     add_worker_path(PACKAGE_ROOT)
     cpus = default_parallelism()
     builder = (

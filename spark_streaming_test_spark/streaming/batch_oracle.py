@@ -519,11 +519,12 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key token-bucket rate limiter in batch-checkable form: the
     first {RATE_LIMIT_K} events per (user, hour) pass, the rest are
     flagged throttled — the trust-and-safety / API-quota primitive. In
-    the live form the per-(key, window) counter is a
-    transformWithState ValueState whose window rollover resets it (the
-    edge-trigger processor's state shape with a counter instead of a
-    flag); this bounded twin IS the same computation on a finite input:
-    one shuffle on the key, one ordered rank, verdict projection."""
+    the live form (``pipeline.rate_limit_stream``) the per-(key, window)
+    counter is ``applyInPandasWithState`` keyed state ``(win, used)``
+    whose window rollover resets it (the edge-trigger state's shape
+    with a counter instead of a flag); this bounded twin IS the same
+    computation on a finite input: one shuffle on the key, one ordered
+    rank, verdict projection."""
     ev = load(spark, sf_dir, "events")
     win = F.window("ts", "1 hour")
     w = Window.partitionBy("user_id", win).orderBy("ts", "event_id")

@@ -11,9 +11,10 @@ Streaming query, in two flavors:
   * event-time: watermark + tumbling window aggregation (idiomatic;
     handles late data, which the DStream model could not), then
     edge-trigger state.
-  * processing-time parity: ``foreachBatch`` with
-    ``trigger(processingTime='5 minutes')`` — batch boundaries define the
-    window exactly as MainApp.java:26,38.
+  * processing-time parity: per-batch totals through the same
+    edge-trigger state under ``trigger(processingTime='5 minutes')``,
+    alerts handed to ``foreachBatch(kafka_wire_batch_sink(...))`` —
+    batch boundaries define the window exactly as MainApp.java:26,38.
 
 The edge-trigger dedup is a keyed stateful operator
 (``applyInPandasWithState``) with per-NIC state {last_alert: bool} —
@@ -90,16 +91,22 @@ def windowed_totals_stream(
     )
 
 
-def _edge_trigger_fn(max_limit: float) -> Callable[..., Iterator[pd.DataFrame]]:
+def _edge_trigger_fn(
+    max_limit: float, ttl_ms: int | None
+) -> Callable[..., Iterator[pd.DataFrame]]:
     """Build the applyInPandasWithState function for the O13 state machine.
 
     Truth table (KafkaProducer.java:35-40): state absent -> emit;
     is_alert != stored flag -> emit; else suppress. State updates on
-    every observation. Input rows are per-key batch totals."""
+    every observation. Input rows are per-key batch totals. With
+    ``ttl_ms`` a key silent that long is evicted, emitting nothing."""
 
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
         (nif,) = key
         total = 0.0
         for pdf in pdfs:
@@ -107,6 +114,8 @@ def _edge_trigger_fn(max_limit: float) -> Callable[..., Iterator[pd.DataFrame]]:
         is_alert = total > max_limit
         prev = state.get if state.exists else None
         state.update((bool(is_alert),))
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
         if prev is None or prev[0] != is_alert:
             yield pd.DataFrame(
                 {
@@ -121,7 +130,7 @@ def _edge_trigger_fn(max_limit: float) -> Callable[..., Iterator[pd.DataFrame]]:
 
 
 def edge_trigger_stream(
-    totals: DataFrame, max_limit: float
+    totals: DataFrame, max_limit: float, ttl_ms: int | None = None
 ) -> DataFrame:
     """Edge-triggered alert dedup over per-key totals.
 
@@ -130,136 +139,24 @@ def edge_trigger_stream(
     micro-batch): Structured Streaming allows one stateful operator per
     query, so the per-batch sum happens inside the state function —
     mirroring the reference, where reduceByKey ran per micro-batch
-    before the stateful producer (MainApp.java:54-63)."""
+    before the stateful producer (MainApp.java:54-63).
+
+    ``ttl_ms`` bounds the state store at large key counts: a NIC silent
+    for ``ttl_ms`` of processing time loses its flag and alerts again on
+    its next observation, like a new key. A processing-time timeout
+    keeps the engine running no-data batches, so a query with a TTL
+    never goes idle (``processAllAvailable`` does not return)."""
     return totals.groupBy("nif").applyInPandasWithState(
-        _edge_trigger_fn(max_limit),
+        _edge_trigger_fn(max_limit, ttl_ms),
         outputStructType=ALERT_SCHEMA,
         stateStructType=T.StructType([T.StructField("last_alert", T.BooleanType())]),
         outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if ttl_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )
-
-
-class EdgeTriggerProcessor:
-    """Spark-4 ``StatefulProcessor`` form of the O13 edge-trigger state
-    machine (KafkaProducer.java:34-41) — the idiomatic successor to
-    ``applyInPandasWithState`` above, with named state variables, TTL
-    support, and state-schema evolution.
-
-    State: one ValueState ``last_alert {flag: bool}`` per NIC key —
-    O(distinct keys) cluster-wide, hash-partitioned, checkpointed (the
-    reference's static per-JVM map was neither, SURVEY.md §4.3).
-
-    Defined lazily as a factory because ``StatefulProcessor`` subclasses
-    import pyspark.sql.streaming.stateful_processor, which exists only on
-    Spark 4.
-    """
-
-    def __new__(cls, max_limit: float, ttl_ms: int | None = None):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class _Processor(StatefulProcessor):
-            def init(self, handle) -> None:
-                # Optional TTL: a NIC silent for ttl_ms gets its state
-                # evicted (and re-alerts on reappearance, like a fresh
-                # key). At 100 TB key cardinalities the TTL is what
-                # bounds the state store; requires
-                # timeMode="processingtime" on the query.
-                self._state = handle.getValueState(
-                    "last_alert", "flag boolean", ttlDurationMs=ttl_ms
-                )
-
-            def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-                (nif,) = key
-                total = 0.0
-                for pdf in rows:
-                    total += float(pdf["total_bytes"].sum())
-                is_alert = total > max_limit
-                prev = self._state.get()
-                self._state.update((bool(is_alert),))
-                if prev is None or bool(prev[0]) != is_alert:
-                    yield pd.DataFrame(
-                        {
-                            "nif": [nif],
-                            "total_bytes": [total],
-                            "is_alert": [is_alert],
-                            "message": [ALERT_MSG if is_alert else INFO_MSG],
-                        }
-                    )
-
-            def close(self) -> None:
-                pass
-
-        return _Processor()
-
-
-def edge_trigger_stream_tws(
-    totals: DataFrame, max_limit: float, ttl_ms: int | None = None
-) -> DataFrame:
-    """Edge-triggered alert dedup via ``transformWithStateInPandas``
-    (Spark 4). Same truth table as :func:`edge_trigger_stream`; prefer
-    this on Spark 4 — ``applyInPandasWithState`` remains as the Spark-3.x
-    fallback. ``ttl_ms`` bounds the state store by evicting keys idle
-    longer than the TTL (state TTL needs processing-time mode)."""
-    return totals.groupBy("nif").transformWithStateInPandas(
-        statefulProcessor=EdgeTriggerProcessor(max_limit, ttl_ms),
-        outputStructType=ALERT_SCHEMA,
-        outputMode="append",
-        timeMode="none" if ttl_ms is None else "processingtime",
-    )
-
-
-def reference_pipeline_foreach_batch(
-    packets: DataFrame,
-    max_limit: float,
-    sink: Callable[[list[dict]], None],
-    trigger: str | None = None,
-    checkpoint: str | None = None,
-):
-    """Exact processing-time parity path (O9-O15): per micro-batch,
-    aggregate bytes per NIC, apply the threshold, run the edge-trigger
-    state machine, and hand emitted alerts to ``sink``.
-
-    The state dict lives on the driver — unlike the reference's
-    per-executor static map (KafkaProducer.java:15) it is globally
-    consistent across batches. The batch aggregate itself runs
-    distributed (groupBy inside foreachBatch); only the per-key flags
-    and emitted rows touch the driver — O(distinct NICs), tiny.
-
-    Returns the started StreamingQuery.
-    """
-    last_alert: dict[str, bool] = {}
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch_df.groupBy("nif")
-            .agg(F.sum("bytes").alias("total_bytes"))
-            .collect()
-        )
-        out: list[dict] = []
-        for r in rows:
-            is_alert = r["total_bytes"] > max_limit
-            prev = last_alert.get(r["nif"])
-            last_alert[r["nif"]] = is_alert
-            if prev is None or prev != is_alert:
-                out.append(
-                    {
-                        "nif": r["nif"],
-                        "total_bytes": r["total_bytes"],
-                        "is_alert": is_alert,
-                        "message": ALERT_MSG if is_alert else INFO_MSG,
-                        "batch_id": batch_id,
-                    }
-                )
-        if out:
-            sink(out)
-
-    writer = packets.writeStream.foreachBatch(process).outputMode("update")
-    if trigger:
-        writer = writer.trigger(processingTime=trigger)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def write_alerts_kafka(
@@ -516,66 +413,8 @@ EWMA_SCHEMA = T.StructType(
 )
 
 
-class EwmaProcessor:
-    """Streaming EWMA (alpha = 1/2) per key — the live twin of the batch
-    ``ts_ewma_smooth`` operator, as a Spark-4 ``StatefulProcessor``.
-
-    State per key is O(1): the running smoothed value and an
-    observation count. Each micro-batch folds its rows in (ts, value)
-    order through ``s -> (s + x) / 2`` — the same IEEE-exact halving as
-    the batch form, so a given arrival order reproduces bitwise across
-    restarts (the ValueState checkpoint carries the fold seed).
-
-    Factory-shaped like :class:`EdgeTriggerProcessor` because the
-    ``StatefulProcessor`` base class only exists on Spark 4.
-    """
-
-    def __new__(cls):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        class _Processor(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._state = handle.getValueState(
-                    "ewma", "s double, n bigint"
-                )
-
-            def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-                (nif,) = key
-                pdf = pd.concat(list(rows))
-                pdf = pdf.sort_values(["ts", "total_bytes"])
-                prev = self._state.get()
-                s = None if prev is None else float(prev[0])
-                n = 0 if prev is None else int(prev[1])
-                for x in pdf["total_bytes"]:
-                    x = float(x)
-                    s = x if s is None else (s + x) / 2.0
-                    n += 1
-                self._state.update((float(s), int(n)))
-                yield pd.DataFrame({"nif": [nif], "n": [n], "ewma": [s]})
-
-            def close(self) -> None:
-                pass
-
-        return _Processor()
-
-
-def ewma_stream_tws(values: DataFrame) -> DataFrame:
-    """Per-key streaming EWMA over (nif, total_bytes, ts) rows: emits
-    the running smoothed value once per key per micro-batch. The state
-    store holds two numbers per key — at 100 TB key cardinality that is
-    the minimal stateful footprint, and TTL/timers can bound it exactly
-    as in :func:`edge_trigger_stream_tws`."""
-    return values.groupBy("nif").transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=EWMA_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def _ewma_fold_fn() -> Callable[..., Iterator[pd.DataFrame]]:
-    """applyInPandasWithState fold for :func:`ewma_stream` — identical
-    recurrence to :class:`EwmaProcessor`, Spark-3.x-compatible API."""
+    """applyInPandasWithState fold for :func:`ewma_stream`."""
 
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -595,9 +434,15 @@ def _ewma_fold_fn() -> Callable[..., Iterator[pd.DataFrame]]:
 
 
 def ewma_stream(values: DataFrame) -> DataFrame:
-    """Per-key streaming EWMA via ``applyInPandasWithState`` — the
-    Spark-3.x twin of :func:`ewma_stream_tws` (same O(1) state, same
-    exact-halving fold; see :class:`EwmaProcessor` for semantics)."""
+    """Per-key streaming EWMA (alpha = 1/2) over (nif, total_bytes, ts)
+    rows — the live twin of the batch ``ts_ewma_smooth`` operator,
+    emitting the running smoothed value once per key per micro-batch.
+
+    State per key is O(1): the running smoothed value and an
+    observation count. Each micro-batch folds its rows in (ts, value)
+    order through ``s -> (s + x) / 2`` — the same IEEE-exact halving as
+    the batch form, so a given arrival order reproduces bitwise across
+    restarts (the state checkpoint carries the fold seed)."""
     return values.groupBy("nif").applyInPandasWithState(
         _ewma_fold_fn(),
         outputStructType=EWMA_SCHEMA,
@@ -659,55 +504,41 @@ RATE_SCHEMA = (
 )
 
 
-class RateLimitProcessor:
-    """Per-key token-bucket rate limiter as a Spark-4
-    ``StatefulProcessor``: ValueState holds (current_window, used)
-    per user; a row in a new hour window resets the budget, rows
-    beyond ``k`` inside one window are flagged throttled. The batch
-    twin (``batch_oracle.stream_rate_limit``) is the same verdict via
-    ROW_NUMBER on bounded input. Factory-shaped like
-    :class:`EdgeTriggerProcessor` (Spark-4-only import)."""
+def _rate_limit_fn(k: int) -> Callable[..., Iterator[pd.DataFrame]]:
+    """applyInPandasWithState fold for :func:`rate_limit_stream`."""
 
-    def __new__(cls, k: int):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+    def fn(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        (user_id,) = key
+        pdf = pd.concat(list(pdfs)).sort_values("ts")
+        win, used = state.get if state.exists else (None, 0)
+        out = []
+        for ts in pdf["ts"]:
+            w = ts.floor("h")
+            if win is None or w != win:
+                win, used = w, 0
+            out.append((user_id, ts, w, used < k))
+            used += 1
+        state.update((win, used))
+        yield pd.DataFrame(out, columns=["user_id", "ts", "window_start", "allowed"])
 
-        class _Processor(StatefulProcessor):
-            def init(self, handle) -> None:
-                self._state = handle.getValueState(
-                    "bucket", "win timestamp, used int"
-                )
-
-            def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-                (user_id,) = key
-                pdf = pd.concat(list(rows)).sort_values("ts")
-                st = self._state.get()
-                win, used = (st[0], int(st[1])) if st is not None else (None, 0)
-                out = []
-                for ts in pdf["ts"]:
-                    w = ts.floor("h")
-                    if win is None or w != win:
-                        win, used = w, 0
-                    allowed = used < k
-                    used += 1
-                    out.append((user_id, ts, w, allowed))
-                self._state.update((win, used))
-                yield pd.DataFrame(
-                    out, columns=["user_id", "ts", "window_start", "allowed"]
-                )
-
-        return _Processor()
+    return fn
 
 
-def rate_limit_stream_tws(events: DataFrame, k: int) -> DataFrame:
-    """Streaming per-(user, hour) rate limiter via
-    ``transformWithStateInPandas``; expects (user_id, ts) columns.
-    State is O(active keys); windows reset the counter in place, so a
-    key's state never grows with history."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RateLimitProcessor(k),
+def rate_limit_stream(events: DataFrame, k: int) -> DataFrame:
+    """Streaming per-(user, hour) token-bucket rate limiter over
+    (user_id, ts) rows: the first ``k`` events of a user's hour window
+    pass, later ones are flagged throttled. State per user is
+    ``(win, used)``: a row in a new hour window resets the budget in
+    place, so a key's state never grows with history — O(active keys).
+    The batch twin is ``batch_oracle.stream_rate_limit``."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        _rate_limit_fn(k),
         outputStructType=RATE_SCHEMA,
+        stateStructType="win timestamp, used int",
         outputMode="append",
-        timeMode="none",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -15,13 +15,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_streaming_test_spark.catalog import TABLES
-from spark_streaming_test_spark.protoshim import ensure_protobuf
 from spark_streaming_test_spark.session import get_spark
-
-# Must happen at import time — before any fixture launches the JVM — so
-# the vendored protobuf shim's PYTHONPATH entry reaches Spark's python
-# workers (they inherit env from the JVM, which inherits it from us).
-ensure_protobuf()
 
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -125,9 +125,10 @@ def test_hot_stages_reads_the_status_store_per_job_group(spark):
     bench.run_query(spark, "hot_py", _slow_python_single_partition, "", 1)
     _slow_single_partition(spark, "").collect()  # no job group
 
-    mine = bench.hot_stages(spark, "hot_mine")
-    other = bench.hot_stages(spark, "hot_other")
-    py = bench.hot_stages(spark, "hot_py")
+    (mine, ev_mine), (other, ev_other), (py, ev_py) = (
+        bench.hot_stages(spark, n) for n in ("hot_mine", "hot_other", "hot_py")
+    )
+    assert ev_mine == ev_other == ev_py == 0
     assert [h["run"] for h in mine] == ["cold", "run1"]
     assert [h["run"] for h in other] == ["cold", "run1"]
     assert [h["run"] for h in py] == ["cold", "run1"]
@@ -141,7 +142,7 @@ def test_hot_stages_reads_the_status_store_per_job_group(spark):
     for h in py:
         assert h["py_run_ms"] >= 400
         assert h["py_init_ms"] >= 0
-    assert bench.hot_stages(spark, "never_ran") == []
+    assert bench.hot_stages(spark, "never_ran") == ([], 0)
 
 
 def test_scaling_probe_offsets_one_span_per_key_domain():

@@ -9,7 +9,6 @@ import shutil
 import subprocess
 import sys
 import time
-from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -23,7 +22,6 @@ from spark_streaming_test_spark.streaming.pipeline import (
     PACKET_SCHEMA,
     edge_trigger_stream,
     packet_stream_from_dir,
-    reference_pipeline_foreach_batch,
     windowed_totals_stream,
 )
 
@@ -100,130 +98,6 @@ def test_edge_trigger_truth_table(spark, tmp_path):
         ("B", 100.0, False, INFO_MSG),    # batch0: first obs EMIT
         ("B", 400.0, True, ALERT_MSG),    # batch1: info->alert EMIT
         # B batch2 (500, alert) suppressed
-    ]
-
-
-def _has_protobuf() -> bool:
-    # transformWithStateInPandas needs a working google.protobuf in both
-    # the driver and the python workers. The vendored mini-runtime
-    # (spark_streaming_test_spark/vendor/protoshim) supplies it when the
-    # real wheel is absent; conftest activates it before the JVM starts
-    # so PYTHONPATH reaches the workers. Gate only on genuine failure.
-    from spark_streaming_test_spark.protoshim import ensure_protobuf
-
-    return ensure_protobuf()
-
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextmanager
-def _rocksdb_state_store(spark):
-    """transformWithStateInPandas requires a state store with column
-    families — RocksDB (rocksdbjni ships in the pyspark distribution),
-    not the default HDFSBackedStateStoreProvider. Scoped set/restore so
-    the session-wide fixture keeps its default for every other test."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-
-
-@pytest.fixture
-def tws_rocksdb(spark):
-    """Hold the RocksDB provider for the duration of a TWS test (the
-    provider class is resolved from session conf when the streaming
-    query plans its state stores)."""
-    with _rocksdb_state_store(spark):
-        yield
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this env)",
-)
-def test_edge_trigger_truth_table_tws(spark, tmp_path, tws_rocksdb):
-    """Same truth table through the Spark-4 transformWithStateInPandas
-    path (EdgeTriggerProcessor) — both stateful APIs must agree."""
-    from spark_streaming_test_spark.streaming.pipeline import edge_trigger_stream_tws
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "chk")
-    batches = [
-        [("A", 200.0, _ts(0)), ("B", 100.0, _ts(0))],
-        [("A", 120.0, _ts(5)), ("A", 100.0, _ts(5)), ("B", 400.0, _ts(5))],
-        [("A", 80.0, _ts(10)), ("B", 500.0, _ts(10))],
-        [("A", 90.0, _ts(15)), ("B", 90.0, _ts(15))],
-    ]
-    _write_packet_batch(spark, src, batches[0], 0)
-    packets = packet_stream_from_dir(spark, src)
-    totals = packets.select("nif", F.col("bytes").alias("total_bytes"))
-    alerts = edge_trigger_stream_tws(totals, max_limit=150.0)
-    q = (
-        alerts.writeStream.format("memory")
-        .queryName("edge_tws_out")
-        .outputMode("append")
-        .option("checkpointLocation", out)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        for i, rows in enumerate(batches[1:], start=1):
-            _write_packet_batch(spark, src, rows, i)
-            q.processAllAvailable()
-        got = [
-            (r["nif"], r["total_bytes"], r["is_alert"], r["message"])
-            for r in spark.sql(
-                "SELECT * FROM edge_tws_out ORDER BY nif, total_bytes"
-            ).collect()
-        ]
-    finally:
-        q.stop()
-    assert got == [
-        ("A", 80.0, False, INFO_MSG),
-        ("A", 200.0, True, ALERT_MSG),
-        ("B", 90.0, False, INFO_MSG),
-        ("B", 100.0, False, INFO_MSG),
-        ("B", 400.0, True, ALERT_MSG),
-    ]
-
-
-def test_foreach_batch_reference_parity(spark, tmp_path):
-    """The processing-time parity path (O9-O15): same truth table via
-    foreachBatch + driver-consistent state."""
-    src = str(tmp_path / "in")
-    chk = str(tmp_path / "chk")
-    batches = [
-        [("A", 200.0, _ts(0))],
-        [("A", 220.0, _ts(5))],
-        [("A", 80.0, _ts(10))],
-    ]
-    _write_packet_batch(spark, src, batches[0], 0)
-    collected: list[dict] = []
-    q = reference_pipeline_foreach_batch(
-        packet_stream_from_dir(spark, src),
-        max_limit=150.0,
-        sink=lambda rows: collected.extend(rows),
-        checkpoint=chk,
-    )
-    try:
-        q.processAllAvailable()
-        for i, rows in enumerate(batches[1:], start=1):
-            _write_packet_batch(spark, src, rows, i)
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    assert [(r["nif"], r["is_alert"], r["message"]) for r in collected] == [
-        ("A", True, ALERT_MSG),   # first observation
-        ("A", False, INFO_MSG),   # 220 suppressed, then flip to info
     ]
 
 
@@ -784,61 +658,56 @@ def test_idempotent_sink_replay_safe(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == total
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this env)",
-)
-def test_edge_trigger_tws_with_ttl_wiring(spark, tmp_path, tws_rocksdb):
-    """TTL-enabled state: same edge-trigger truth table on a single
-    batch (TTL far in the future), proving the ttlDurationMs +
-    processing-time-mode wiring end-to-end."""
-    from spark_streaming_test_spark.streaming.pipeline import (
-        PACKET_SCHEMA,
-        edge_trigger_stream_tws,
+def test_edge_trigger_ttl_evicts_silent_key(spark, tmp_path):
+    """With ``ttl_ms`` a NIC silent past the TTL loses its flag: A
+    alerts at 200, its state is evicted (the state store reads 0 rows),
+    and its next alert at 220 is emitted again as a first observation,
+    where without a TTL (test_edge_trigger_truth_table) it is
+    suppressed. A processing-time timeout keeps no-data batches
+    running, so processAllAvailable() never returns: the test paces
+    batches with a 1 s trigger and polls."""
+    src = str(tmp_path / "in")
+    _write_packet_batch(spark, src, [("A", 200.0, _ts(0))], 0)
+    totals = packet_stream_from_dir(spark, src).select(
+        "nif", F.col("bytes").alias("total_bytes")
     )
-
-    src = str(tmp_path / "packets")
-    rows = [
-        ("eth0", 200.0, "2024-01-01 00:00:30"),
-        ("eth1", 50.0, "2024-01-01 00:00:40"),
-    ]
-    df = spark.createDataFrame(
-        [(n, b, __import__("datetime").datetime.fromisoformat(t)) for n, b, t in rows],
-        PACKET_SCHEMA,
-    )
-    df.write.parquet(src, mode="overwrite")
-    # One packet per NIC: feed sizes straight into the stateful op (an
-    # unwatermarked streaming agg upstream of TWS is rejected in append
-    # mode; aggregation-composition is covered by the truth-table test).
-    totals = (
-        spark.readStream.schema(PACKET_SCHEMA)
-        .parquet(src)
-        .select("nif", F.col("bytes").alias("total_bytes"))
-    )
-    alerts = edge_trigger_stream_tws(totals, max_limit=150.0, ttl_ms=3_600_000)
-    # No availableNow here: in processing-time mode the engine keeps
-    # scheduling no-data batches to advance the TTL clock, so the query
-    # never self-terminates — poll the sink for both rows, then stop.
     q = (
-        alerts.writeStream.format("memory")
+        edge_trigger_stream(totals, max_limit=150.0, ttl_ms=1500)
+        .writeStream.format("memory")
         .queryName("ttl_out")
         .outputMode("append")
+        .trigger(processingTime="1 second")
         .option("checkpointLocation", str(tmp_path / "chk"))
         .start()
     )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM ttl_out").count() >= 2:
-                break
+
+    def wait_for(cond) -> None:
+        deadline = time.time() + 90
+        while not cond():
+            assert time.time() < deadline, q.lastProgress
             time.sleep(0.5)
+
+    def state_rows() -> int | None:
+        progress = q.lastProgress
+        return progress and progress["stateOperators"][0]["numRowsTotal"]
+
+    def emitted() -> list[tuple]:
+        return [
+            (r["nif"], r["total_bytes"], r["is_alert"], r["message"])
+            for r in spark.sql("SELECT * FROM ttl_out ORDER BY total_bytes").collect()
+        ]
+
+    try:
+        wait_for(lambda: len(emitted()) == 1)
+        wait_for(lambda: state_rows() == 0)
+        _write_packet_batch(spark, src, [("A", 220.0, _ts(5))], 1)
+        wait_for(lambda: len(emitted()) == 2)
     finally:
         q.stop()
-    got = {
-        r["nif"]: (r["is_alert"])
-        for r in spark.sql("SELECT * FROM ttl_out").collect()
-    }
-    assert got == {"eth0": True, "eth1": False}
+    assert emitted() == [
+        ("A", 200.0, True, ALERT_MSG),
+        ("A", 220.0, True, ALERT_MSG),  # re-emitted: the flag was evicted
+    ]
 
 
 def test_dedup_within_watermark_bounded_state(spark, tmp_path):
@@ -1075,22 +944,12 @@ def test_streaming_query_listener_reports_progress(spark, tmp_path):
     assert seen["rows"] > 0, "listener saw zero input rows"
 
 
-@pytest.mark.parametrize("api", ["apply", "tws"])
-def test_streaming_ewma_matches_batch_fold(spark, tmp_path, api, tws_rocksdb):
+def test_streaming_ewma_matches_batch_fold(spark, tmp_path):
     """Three micro-batches of per-key values; the final streaming EWMA
     must equal a plain Python left fold s -> (s+x)/2 over the full
     arrival-ordered sequence — state carries the fold seed across
-    batches, and the exact-halving recurrence leaves no float slack.
-    Both stateful APIs run the same recurrence; the Spark-4
-    transformWithState form is env-gated on protobuf."""
-    from spark_streaming_test_spark.streaming.pipeline import (
-        ewma_stream,
-        ewma_stream_tws,
-    )
-
-    if api == "tws" and not _has_protobuf():
-        pytest.skip("transformWithStateInPandas needs google.protobuf")
-    ewma_op = ewma_stream_tws if api == "tws" else ewma_stream
+    batches, and the exact-halving recurrence leaves no float slack."""
+    from spark_streaming_test_spark.streaming.pipeline import ewma_stream
 
     src = str(tmp_path / "in")
     chk = str(tmp_path / "chk")
@@ -1105,9 +964,9 @@ def test_streaming_ewma_matches_batch_fold(spark, tmp_path, api, tws_rocksdb):
         "nif", F.col("bytes").alias("total_bytes"), "ts"
     )
     q = (
-        ewma_op(values)
+        ewma_stream(values)
         .writeStream.format("memory")
-        .queryName(f"ewma_out_{api}")
+        .queryName("ewma_out")
         .outputMode("append")
         .option("checkpointLocation", chk)
         .start()
@@ -1118,7 +977,7 @@ def test_streaming_ewma_matches_batch_fold(spark, tmp_path, api, tws_rocksdb):
             _write_packet_batch(spark, src, rows, i)
             q.processAllAvailable()
         rows = spark.sql(
-            f"SELECT nif, n, ewma FROM ewma_out_{api}"
+            "SELECT nif, n, ewma FROM ewma_out"
         ).collect()
     finally:
         q.stop()
@@ -1413,16 +1272,12 @@ def test_stream_stream_outer_join_emits_unmatched(spark, tmp_path):
     assert sum(1 for c, p in got if c == 2) == 1
 
 
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (not in this env)",
-)
-def test_rate_limit_stream_tws(spark, tmp_path, tws_rocksdb):
-    """Live per-(user, hour) rate limiter through transformWithState:
+def test_rate_limit_stream(spark, tmp_path):
+    """Live per-(user, hour) rate limiter through keyed state:
     first K events of a window pass, later ones are throttled, a new
     window resets the budget — and the state survives across
     micro-batches (the second batch continues the first's count)."""
-    from spark_streaming_test_spark.streaming.pipeline import rate_limit_stream_tws
+    from spark_streaming_test_spark.streaming.pipeline import rate_limit_stream
 
     def ts(h, m):
         from datetime import datetime
@@ -1444,7 +1299,7 @@ def test_rate_limit_stream_tws(spark, tmp_path, tws_rocksdb):
     # batch 1: user 1 sends 3 events in hour 10 (K=2 -> TTT -> T,T,F)
     write_batch([(1, ts(10, 0)), (1, ts(10, 5)), (1, ts(10, 10))], "b0")
     stream = spark.readStream.schema("user_id bigint, ts timestamp").parquet(src)
-    limited = rate_limit_stream_tws(stream, k=2)
+    limited = rate_limit_stream(stream, k=2)
     q = (
         limited.writeStream.format("memory")
         .queryName("rl_out")
@@ -2488,3 +2343,52 @@ def test_checkpoint_manager_keeps_atomic_logs_and_checksums(spark, tmp_path):
         assert os.path.exists(f"{d}/.{name}.crc"), f"no Hadoop .crc for {f}"
     for f in deltas:
         assert os.path.exists(f"{f}.crc"), f"no Spark checksum for {f}"
+
+
+def test_edge_trigger_resumes_past_leftover_checkpoint_temp_files(spark, tmp_path):
+    """A writer that loses the atomic-write race for a log entry leaves
+    its temp file and that file's Hadoop .crc in the log directory
+    (``.N.<uuid>.tmp``, ``..N.<uuid>.tmp.crc``). A restart over such a
+    pair must not read it as a batch: the query resumes with the same
+    state and the same emissions."""
+    import uuid
+
+    src = str(tmp_path / "in")
+    chk = str(tmp_path / "chk")
+    out = str(tmp_path / "out")
+
+    def run_once():
+        totals = packet_stream_from_dir(spark, src).select(
+            "nif", F.col("bytes").alias("total_bytes")
+        )
+        q = (
+            edge_trigger_stream(totals, max_limit=150.0)
+            .writeStream.foreachBatch(
+                lambda df, _bid: df.write.mode("append").parquet(out)
+            )
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _write_packet_batch(spark, src, [("A", 200.0, _ts(0)), ("B", 100.0, _ts(0))], 0)
+    run_once()
+    tmp = f".1.{uuid.uuid4()}.tmp"
+    for name in (tmp, f".{tmp}.crc"):
+        with open(f"{chk}/offsets/{name}", "w") as f:
+            f.write("v1\n{}\n")
+    _write_packet_batch(spark, src, [("A", 220.0, _ts(5)), ("B", 400.0, _ts(5))], 1)
+    run_once()
+    rows = sorted(
+        (r["nif"], r["total_bytes"], r["is_alert"])
+        for r in spark.read.parquet(out).collect()
+    )
+    assert rows == [
+        ("A", 200.0, True),   # A's 220 is suppressed: its flag survived
+        ("B", 100.0, False),
+        ("B", 400.0, True),
+    ], rows
+    assert sorted(n for n in os.listdir(f"{chk}/offsets") if n.isdigit()) == ["0", "1"]

@@ -15,8 +15,9 @@ Output: one JSON line per query appended to ``--out`` (default
 ``plans/r14/single_task_sweep.jsonl``) with the timed run's wall and
 any hot single-task stages (each tagged with the run that produced it
 and with its Python worker time, ``py_init_ms`` and ``py_run_ms``, so
-a per-task Python set-up floor shows without an event log), plus a
-final summary line. An unknown or failing query becomes an
+a per-task Python set-up floor shows without an event log) and the
+count of its stage ids the status store evicted before they were read,
+plus a final summary line. An unknown or failing query becomes an
 ``err`` line and the sweep goes on.
 
 Usage::
@@ -30,6 +31,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
 import time
 
@@ -45,6 +47,17 @@ from bench import (  # noqa: E402
 from spark_streaming_test_spark import registry  # noqa: E402
 from spark_streaming_test_spark.session import get_spark  # noqa: E402
 
+# Stages and jobs the status store keeps (spark.ui.retainedStages and
+# retainedJobs, default 1000). Over the limit it drops a tenth of them,
+# SKIPPED stages first whatever their age, then the oldest completed
+# ones, so a query's own stages vanish before hot_stages reads them:
+# 458 stage ids of a graph_eccentricity, graph_betweenness_exact sweep
+# run twice at sf0.1. The largest cold + run1 window measured is
+# graph_betweenness_exact's, 536 stages in 353 jobs; 5000 keeps every
+# completed stage of the query just run, at ~15 KB of driver heap a
+# stage. hot_stages counts the stage ids evicted anyway.
+RETAINED = 5000
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -53,20 +66,28 @@ def main() -> None:
         ROOT, "plans", "r14", "single_task_sweep.jsonl"))
     args = ap.parse_args()
 
+    # Read when get_spark launches the JVM, as perfbench passes its
+    # event-log conf.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf", f"spark.ui.retainedStages={RETAINED}",
+        "--conf", f"spark.ui.retainedJobs={RETAINED}",
+        "pyspark-shell",
+    ])
     spark = get_spark("single-task-sweep")
     qs = registry.queries()
     names = [n for n in args.only.split(",") if n] or sorted(qs)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     os.makedirs(os.path.dirname(args.out), exist_ok=True)
-    n_hot = 0
+    n_hot = n_evicted = 0
     with open(args.out, "a") as out:
         for i, name in enumerate(names):
             rec: dict = {"query": name}
             try:
                 _, [wall] = run_query(spark, name, qs[name], sf_dir, 1)
-                hot = hot_stages(spark, name)
-                rec.update(wall=wall, hot=hot)
+                hot, evicted = hot_stages(spark, name)
+                rec.update(wall=wall, hot=hot, evicted=evicted)
+                n_evicted += evicted
                 if hot:
                     n_hot += 1
                     print(f"[{i+1}/{len(names)}] {name} wall={wall:.2f}s "
@@ -82,12 +103,13 @@ def main() -> None:
             out.flush()
         out.write(json.dumps({
             "summary": True, "n_queries": len(names),
-            "n_with_hot_single_task": n_hot,
+            "n_with_hot_single_task": n_hot, "n_evicted_stages": n_evicted,
             "min_run_s": HOT_MIN_RUN_S, "max_tasks": HOT_MAX_TASKS,
             "sf_dir": sf_dir,
             "utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }) + "\n")
-    print(f"done: {len(names)} queries, {n_hot} with hot single-task stages")
+    print(f"done: {len(names)} queries, {n_hot} with hot single-task stages, "
+          f"{n_evicted} stages evicted before they were read")
 
 
 if __name__ == "__main__":
