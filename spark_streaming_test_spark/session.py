@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from spark_streaming_test_spark import cds
+
 
 # The directory that holds this package. get_spark puts it on the Python
 # workers' path: the worker daemon and executor-side imports (the Kafka
@@ -92,7 +94,8 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
         builder = builder.config(
             "spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEMORY"]
         )
-    spark = builder.getOrCreate()
+    # The launch maps Spark's classes from a cached class archive (cds).
+    spark = cds.get_or_create(builder)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
