@@ -34,13 +34,42 @@ the loop STATE (node ranks, centroids, labels — orders of magnitude
 smaller than the corpus), never corpus rows; ``eager=False`` defers
 materialization to the round's first consumer so fixed-round loops
 pay exactly one job per round.
+
+This module is also the only place that calls ``localCheckpoint``
+(``tests/test_iterate.py`` scans the package for any other call), so
+every lineage cut in the engine goes through ``materialize`` and gets
+lesson 3's assertion.
+
+**Cross-query memo.** Some checkpointed frames are pure functions of
+the input tables and are read by several queries (graph edge lists,
+the distinct basket items, the PRF token table).
+``materialize_once(spark, sf_dir, name, build)`` keeps whatever
+``build()`` returned — a frame or a tuple such as ``(edges, deg, n)`` —
+under the key ``(applicationId, sf_dir, name)``:
+
+- ``applicationId``, not ``id(spark)``: a checkpointed frame is bound to
+  the SparkContext that made it, and a stopped, collected session's
+  ``id()`` can be reused by a new one, which would then be handed frames
+  over a dead context. An application id is never reused.
+- An insert evicts every entry of another application, so a process
+  that recycles sessions does not keep their checkpoint blocks alive.
+- ``session.reset_query_state`` calls ``clear_memo`` BEFORE it
+  unpersists every RDD block. A checkpointed frame whose blocks are gone
+  cannot be recomputed (its lineage is cut), so an entry that survived
+  the reset would throw ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` on its next
+  use; cleared, the next call rebuilds it.
+
+Module caches of plain Python values (seed lists, centroid arrays) hold
+no Spark state and stay in their modules, declared in ``_PLAIN_CACHES``
+(``tests/test_session_reset.py`` fails on any other module-level
+``*_CACHE`` dict).
 """
 
 from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 StepFn = Callable[[DataFrame, int], DataFrame]
 ProbeFn = Callable[[DataFrame], Any]
@@ -48,6 +77,8 @@ StateStepFn = Callable[[dict, int], "dict[str, DataFrame] | None"]
 StateProbeFn = Callable[[dict], Any]
 
 _UNSET = object()
+
+_MEMO: dict[tuple[str, str, str], Any] = {}
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -61,6 +92,27 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         "iterative loops would re-execute their whole prefix per round"
     )
     return out
+
+
+def materialize_once(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], Any]
+) -> Any:
+    """``build()``'s result, built once per (application, ``sf_dir``,
+    ``name``) and kept across queries until ``clear_memo`` (see the
+    module docstring). ``build`` cuts lineage itself, with
+    ``materialize``."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
+    if key not in _MEMO:
+        for stale in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[stale]
+        _MEMO[key] = build()
+    return _MEMO[key]
+
+
+def clear_memo() -> None:
+    """Drop every ``materialize_once`` entry."""
+    _MEMO.clear()
 
 
 def iterate(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
+from ..iterate import materialize
 from ..registry import register
 
 N_MERGES = 8
@@ -95,10 +96,10 @@ def bpe_train(words: DataFrame, n_merges: int = N_MERGES) -> list[dict]:
     merge table is bitwise the sequential one's (verified: identical
     tables at sf0.001/0.01/0.1, sampled and full; batching fired 3 of 7
     opportunities at every SF — 8 merges in 5 collects)."""
-    syms = words.select(
+    syms = materialize(words.select(
         F.col("n"),
         F.concat_ws(SEP, F.split(F.col("word"), "(?!^)(?=.)")).alias("s"),
-    ).localCheckpoint(eager=True)
+    ))
     merges: list[dict] = []
     it = 0
     while it < n_merges:

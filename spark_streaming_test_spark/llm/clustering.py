@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..catalog import load, spread
 from ..functions.deterministic import dsum
 from ..functions.literals import lit_double_matrix, lit_doubles, lit_longs
-from ..iterate import iterate
+from ..iterate import iterate, materialize
 from ..registry import register
 
 K = 8  # centroids seeded from vec_id < K
@@ -68,8 +68,8 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same memoized-dimension pattern as the IVF coarse quantizer in
 # ``llm/similarity.py``.
 _SEED_CACHE: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
-# Plain Python values (no Spark state) — exempt from the
-# register_frame_cache reset contract (tests/test_session_reset.py).
+# Plain Python values (no Spark state), so not in the cross-query
+# frame memo, iterate.materialize_once (tests/test_session_reset.py).
 _PLAIN_CACHES = ("_SEED_CACHE",)
 
 
@@ -813,9 +813,9 @@ def emb_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.similarity import dot
 
     e = load(spark, sf_dir, "embeddings")
-    emb = e.select(
+    emb = materialize(e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("x")
-    ).localCheckpoint(eager=True)
+    ))
 
     def dist2(xa, xb):
         return dot(xa, xa) + dot(xb, xb) - 2 * dot(xa, xb)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
+from ..iterate import materialize
 from ..registry import register
 from .dedup import _shingles
 
@@ -346,11 +347,10 @@ def decon_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_b = bands.filter(F.col("is_eval")).select(
         F.col("doc_id").alias("eval_doc"), "band", "bucket"
     )
-    cand = (
+    cand = materialize(
         train_b.join(F.broadcast(eval_b), ["band", "bucket"])
         .select("train_doc", "eval_doc")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     cand_ids = (
         cand.select(F.col("train_doc").alias("doc_id"))

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
-from ..iterate import iterate
+from ..iterate import iterate, materialize
 from ..registry import register
 
 # Pairwise (O(n^2)-shaped) queries cap the doc_id range so the oracle
@@ -321,7 +321,7 @@ def lsh_guarded_pairs(bands: DataFrame) -> DataFrame:
     # ~3 signature passes (plan-verified; VERDICT r5 item 5). The
     # LogicalRDD keeps the (band, bucket) output partitioning, so the
     # self-join consumes it with no further exchange.
-    sized = sized.localCheckpoint(eager=True)
+    sized = materialize(sized)
     cold = sized.filter(F.col("bsz") <= LSH_BUCKET_CAP)
     # Shuffle-hash self-join (not broadcast): both sides are the same
     # checkpointed frame; a broadcast would ship every band row to every
@@ -440,7 +440,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the candidate PAIRS (tiny — LSH's whole point) so the
     # verification stage can consume them twice (id semi-filter + final
     # join) without re-running the signature/band subtree.
-    candidates = candidates.localCheckpoint(eager=True)
+    candidates = materialize(candidates)
     # Exact verification touches CANDIDATE DOCUMENTS ONLY: semi-filter
     # the corpus to candidate ids BEFORE shingling, so the verify-side
     # shingle computation is bounded by the candidate count, not the
@@ -841,9 +841,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage each round so the plan doesn't deepen with iterations."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     # Symmetric edge list; self-loops implicit via the label join below.
-    edges = pairs.union(
+    edges = materialize(pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=True)
+    ))
     def _cc_step(labels: DataFrame, _i: int) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.doc_b == labels.doc_id)
@@ -1282,7 +1282,7 @@ def join_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("shingle", "rank")
     )
-    ranked = (
+    ranked = materialize(
         postings.join(F.broadcast(df_rank), "shingle")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("rank")).alias("ranks"))
@@ -1291,7 +1291,6 @@ def join_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "prefix", F.slice("ranks", 1, F.col("n") - PREFIX_OVERLAP_T + 1)
         )
-        .localCheckpoint(eager=True)
     )
     pa = ranked.select(
         F.col("doc_id").alias("doc_a"),
@@ -1400,10 +1399,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the md5/minhash signature pass otherwise. In production this
     # frame IS the stored band index; localCheckpoint is its in-session
     # stand-in.
-    bands = (
+    bands = materialize(
         lsh_band_frame(docs)
         .withColumn("is_delta", is_delta)
-        .localCheckpoint(eager=True)
     )
     delta_b = bands.filter("is_delta").select("doc_id", "band", "bucket")
     wb = Window.partitionBy("band", "bucket")
@@ -1429,7 +1427,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_a").alias("match_id"),
         F.lit("delta").alias("match_src"),
     )
-    candidates = probe.unionAll(intra).localCheckpoint(eager=True)
+    candidates = materialize(probe.unionAll(intra))
     cand_ids = (
         candidates.select("doc_id")
         .unionAll(candidates.select(F.col("match_id").alias("doc_id")))
@@ -2059,12 +2057,11 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("n_common").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_common")
     )
-    truth = (
+    truth = materialize(
         common.join(F.broadcast(sa), "doc_a")
         .join(F.broadcast(sb), "doc_b")
         .filter(jac >= 0.5)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     # LSH candidates from the same signature machinery
     sig = minhash_signatures(docs)
@@ -2082,7 +2079,7 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
     ba, bb2 = bands.alias("a").hint("shuffle_hash"), bands.alias("b").hint("shuffle_hash")
-    cand = (
+    cand = materialize(
         ba.join(
             bb2,
             (F.col("a.band") == F.col("b.band"))
@@ -2091,7 +2088,6 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     hits = truth.join(cand, ["doc_a", "doc_b"])
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
@@ -2250,14 +2246,13 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("n_common").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_common")
     )
-    truth = (
+    truth = materialize(
         common.join(F.broadcast(sa), "doc_a")
         .join(F.broadcast(sb), "doc_b")
         .filter(jac >= 0.5)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
-    sig = minhash_signatures(docs).localCheckpoint(eager=True)
+    sig = materialize(minhash_signatures(docs))
     cands = None
     for bands, rows in LSH_TUNE_CONFIGS:
         b_arr = F.array(
@@ -2545,9 +2540,9 @@ def dedup_exact_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load(spark, sf_dir, "documents"))
     grams = _token_gram_frame(docs)
     wg = Window.partitionBy("g")
-    sized = grams.select(
+    sized = materialize(grams.select(
         "doc_id", "pos", "g", F.count(F.lit(1)).over(wg).alias("occ")
-    ).localCheckpoint(eager=True)
+    ))
     kept = sized.filter(F.col("occ") <= SUBSTR_GRAM_CAP)
     a = kept.select(
         F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "g"
@@ -2555,11 +2550,10 @@ def dedup_exact_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = kept.select(
         F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"), "g"
     ).hint("shuffle_hash")
-    m = (
+    m = materialize(
         a.join(b, ["g"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b", "pa", "pb", "g")
-        .localCheckpoint(eager=True)
     )
     wd = Window.partitionBy(
         "doc_a", "doc_b", (F.col("pa") - F.col("pb"))
@@ -2733,14 +2727,13 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _token_gram_frame(docs).withColumn(
         "is_delta", F.col("doc_id") % DELTA_MOD == 0
     )
-    base_idx = (
+    base_idx = materialize(
         grams.filter(~F.col("is_delta"))
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("occ"))
         .filter(F.col("occ") <= SUBSTR_GRAM_CAP)
         .select("g")
         .withColumn("in_base", F.lit(True))
-        .localCheckpoint(eager=True)
     )
     delta_g = (
         grams.filter("is_delta").select("doc_id", "g").distinct()
@@ -2928,11 +2921,11 @@ def dedup_bloom_prescreen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the filter is O({BLOOM_WORDS}) words broadcast to every
     probe task; the probe is a projection + tiny-table join."""
     d = spread(load(spark, sf_dir, "documents"))
-    hashed = d.select(
+    hashed = materialize(d.select(
         "doc_id",
         F.md5("text").alias("h"),
         (F.col("doc_id") % DELTA_MOD == 0).alias("is_delta"),
-    ).localCheckpoint(eager=True)
+    ))
 
     def pos(j):
         return (

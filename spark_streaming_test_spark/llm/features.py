@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, spread
 from ..functions.deterministic import davg, dsum, sql_davg, sql_dsum
+from ..iterate import materialize
 from ..registry import register
 
 Z_DP = 6  # z-score rounding (see functions/deterministic.py)
@@ -424,7 +425,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # original because IEEE-754 multiplication commutes. Checkpointed
     # before the union so the mirror branch reuses the one materialized
     # aggregate instead of compiling a second covariance build.
-    tri = _embedding_pair_moments(e).localCheckpoint(eager=True)
+    tri = materialize(_embedding_pair_moments(e))
     mom = tri.unionByName(
         tri.filter(F.col("di") != F.col("dj")).select(
             F.col("dj").alias("di"),
@@ -485,10 +486,9 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"dim": dims, "vi": v, "nq": [nq] * D}
         ).astype({"dim": "int64", "vi": "int64", "nq": "float64"})
 
-    v = (
+    v = materialize(
         cov_fp.coalesce(1)
         .mapInPandas(_power_solve, "dim bigint, vi bigint, nq double")
-        .localCheckpoint(eager=True)
     )
     anchor = (
         v.orderBy(F.abs(F.col("vi")).desc(), "dim")

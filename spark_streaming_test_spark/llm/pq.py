@@ -50,8 +50,8 @@ QUERY_VEC_ID = 0  # ADC query = this embedding row (read by both engines)
 
 _CB_CACHE: dict[str, list[list[list[float]]]] = {}
 _QV_CACHE: dict[str, list[float]] = {}
-# Plain Python values (no Spark state) — exempt from the
-# register_frame_cache reset contract (tests/test_session_reset.py).
+# Plain Python values (no Spark state), so not in the cross-query
+# frame memo, iterate.materialize_once (tests/test_session_reset.py).
 _PLAIN_CACHES = ("_CB_CACHE", "_QV_CACHE")
 
 

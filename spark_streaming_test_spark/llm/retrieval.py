@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
+from ..iterate import materialize, materialize_once
 from ..registry import register
-from ..session import register_frame_cache
 
 TFIDF_TOPK = 5  # top terms kept per document
 SCORE_DP = 6  # score rounding, see module docstring
@@ -335,11 +335,10 @@ def text_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    tf = (
+    tf = materialize(  # shared by both arms + df
         toks.filter(F.col("token").isin(*BM25_QUERY))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)  # shared by both arms + df
     )
     df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     dec = "decimal(25,6)"
@@ -543,27 +542,12 @@ def sim_sparse_cosine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- pseudo-relevance-feedback query expansion ----------------------------
 
-# Registered for harness resets (same contract as the basket/graph/HITS
-# caches): reset_query_state unpersists ALL RDD blocks, and a
-# localCheckpointed frame whose blocks are gone is unrecoverable
-# (lineage truncated) — an unregistered cache would hand the next
-# consumer a frame that throws CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-_PRF_TOKS_CACHE: dict = register_frame_cache({})
-
-
 def _cached_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized localCheckpoint of the token table, keyed by the
-    session's applicationId (stable, never reused after stop) + sf_dir —
-    keying by id(spark) could hand a new session a checkpoint bound to a
-    dead SparkContext after GC address reuse. Entries from other
-    applications are evicted on insert so checkpointed RDDs don't
-    accumulate for the process lifetime."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PRF_TOKS_CACHE:
-        for stale in [k for k in _PRF_TOKS_CACHE if k[0] != key[0]]:
-            del _PRF_TOKS_CACHE[stale]
-        _PRF_TOKS_CACHE[key] = _tokens(spark, sf_dir).localCheckpoint(eager=True)
-    return _PRF_TOKS_CACHE[key]
+    """The token table, checkpointed once per SF (``materialize_once``)."""
+    return materialize_once(
+        spark, sf_dir, "prf_tokens", lambda: materialize(_tokens(spark, sf_dir))
+    )
+
 
 PRF_FEEDBACK_DOCS = 5   # top-F first-pass docs feed the expansion
 PRF_EXPAND_TERMS = 3    # new terms added to the query

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import bounded_broadcast, load, spread
-from ..iterate import iterate
+from ..iterate import iterate, materialize
 from ..registry import register
 
 N_QUERIES = 5  # query set: vec_id < 5
@@ -272,8 +272,8 @@ IVF_NPROBE = 2
 # query batches — re-collecting it per call would bill every query for
 # the index build. Keyed by sf_dir so each scale factor gets its own.
 _IVF_CACHE: dict[str, tuple[list, list]] = {}
-# Plain Python values (no Spark state) — exempt from the
-# register_frame_cache reset contract (tests/test_session_reset.py).
+# Plain Python values (no Spark state), so not in the cross-query
+# frame memo, iterate.materialize_once (tests/test_session_reset.py).
 _PLAIN_CACHES = ("_IVF_CACHE",)
 
 
@@ -793,11 +793,10 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
-    cand = (
+    cand = materialize(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= MMR_CAND)
         .select("query_id", "neighbor_id", "cosine")
-        .localCheckpoint(eager=True)
     )
     # The pair join only ever touches CANDIDATE vectors (a/b come from
     # cand), so filter the corpus down to the bounded candidate-id set
@@ -1367,9 +1366,9 @@ def nn_descent(
     # graph-ANN queries). Bitwise identical: the norm is the same fold
     # over the same array, and IEEE ops on identical doubles are
     # deterministic — the oracle still recomputes per pair.
-    embn = emb.select(
+    embn = materialize(emb.select(
         "vec_id", "x", norm(F.col("x")).alias("nx")
-    ).localCheckpoint(eager=True)
+    ))
     g = (
         emb.select("vec_id")
         .crossJoin(
@@ -1581,9 +1580,7 @@ def sim_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the seed graph rather than an absolute bar."""
     e = load(spark, sf_dir, "embeddings")
     n = e.count()  # O(1) scalar; the oracle's (SELECT COUNT(*)) twin
-    emb = e.select("vec_id", _as_double("embedding").alias("x")).localCheckpoint(
-        eager=True
-    )
+    emb = materialize(e.select("vec_id", _as_double("embedding").alias("x")))
     g = nn_descent(spark, emb, n, NND_K, NND_ROUNDS)
     out = (
         g.join(
@@ -1704,21 +1701,19 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate ids shuffle, payload vectors only enter the score join."""
     e = load(spark, sf_dir, "embeddings")
     n = e.count()
-    emb = e.select("vec_id", _as_double("embedding").alias("x")).localCheckpoint(
-        eager=True
-    )
+    emb = materialize(e.select("vec_id", _as_double("embedding").alias("x")))
     knn = nn_descent(spark, emb, n, NND_K, NND_ROUNDS)
     # per-vector norms once (see nn_descent's embn note)
-    embn = emb.select(
+    embn = materialize(emb.select(
         "vec_id", "x", norm(F.col("x")).alias("nx")
-    ).localCheckpoint(eager=True)
-    queries = embn.filter(F.col("vec_id") < N_QUERIES).select(
+    ))
+    queries = materialize(embn.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q"),
         F.col("x").alias("xq"),
         F.col("nx").alias("nq"),
-    ).localCheckpoint(eager=True)
+    ))
     entries = [0] + [(0 + j * NND_STEP) % n for j in range(1, NND_K + 1)]
-    beam = (
+    start = (
         queries.select("q")
         .crossJoin(
             F.broadcast(
@@ -1728,7 +1723,6 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .filter(F.col("c") != F.col("q"))
-        .localCheckpoint(eager=True)
     )
     # Per-hop plan shape (optimization r13, guide §2.4/2.5, the
     # nn_descent recipe): ONE explicit keyed exchange on q — the
@@ -1745,7 +1739,8 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one task while a production batch fans out. Bitwise unchanged:
     # same DISTINCT candidate set, same fold, same tie-breaks.
     npart = ann_partitions(spark, N_QUERIES * BEAM_W * (NND_K + 1))
-    for _ in range(BEAM_HOPS):
+
+    def _hop(beam: DataFrame, _i: int) -> DataFrame:
         expand = (
             beam.join(
                 bounded_broadcast(knn.withColumnRenamed("v", "c"), n * NND_K),
@@ -1782,12 +1777,13 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         wnd = Window.partitionBy("q").orderBy(F.col("cosine").desc(), "c")
-        beam = (
+        return (
             sc.withColumn("rk", F.row_number().over(wnd))
             .filter(F.col("rk") <= BEAM_W)
             .select("q", "c")
-            .localCheckpoint(eager=True)
         )
+
+    beam = iterate(start, _hop, BEAM_HOPS)
     return (
         beam.join(F.broadcast(queries), "q")
         .join(
@@ -1902,7 +1898,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nn_descent norms-once trick. Bitwise unchanged: the norm is the
     # same fold over the same doubles, and the product/division see
     # identical operands.
-    mem = (
+    mem = materialize(
         ivf_corpus_cells(spark, sf_dir, e)
         .select(
             "vec_id",
@@ -1910,7 +1906,6 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             _as_double("embedding").alias("emb"),
             norm(_as_double("embedding")).alias("nx"),
         )
-        .localCheckpoint(eager=True)
     )
     # NOTE (optimization r14): an explicit cell-keyed repartition was
     # A/B-measured HERE and reverted (1.57 -> 1.94 s at sf0.1 — this
@@ -2035,7 +2030,7 @@ def dedup_semdedup_centroid_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass plus the interpreted centrality fold. The projection also
     # carries the f64 cast and per-vector norm so the pairwise stage
     # pays one fold per pair (dot) instead of three.
-    memc = (
+    memc = materialize(
         mem.join(F.broadcast(cent_df), "cell")
         .select(
             "vec_id",
@@ -2055,7 +2050,6 @@ def dedup_semdedup_centroid_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("nx") * F.col("cnorm"))
             ).alias("ccos"),
         )
-        .localCheckpoint(eager=True)
     )
     # Explicit cell-keyed repartition (optimization r14, guide §2.5):
     # same single-task fix as dedup_semdedup's pairwise stage.

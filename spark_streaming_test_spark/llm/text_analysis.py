@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
+from ..iterate import materialize
 from ..registry import register
 
 # Marker words per language for the n-gram/stopword language-ID
@@ -457,10 +458,9 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bg").isNotNull())
         .select("bg.w1", "bg.w2")
     )
-    big_counts = (
+    big_counts = materialize(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
     )
     uni1 = big_counts.groupBy(F.col("w1").alias("w")).agg(
         F.sum("n_pair").alias("n_first")
@@ -736,11 +736,10 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Model tables: checkpoint so the scoring pass's broadcast builds
     # don't re-run the corpus tokenization (the PMI lesson).
-    big = (
+    big = materialize(
         pair_frame()
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
     )
     lp_big = big.select(
         "w1",
@@ -753,12 +752,11 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             LOGPROB_DP,
         ).alias("logp"),
     )
-    vocab = (
+    vocab = materialize(
         d.select(F.explode_outer(toks).alias("token"))
         .filter(F.col("token").isNotNull() & (F.col("token") != ""))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     total = vocab.agg(F.sum("n").alias("t"))
     lp_uni = vocab.join(F.broadcast(total), F.lit(True)).select(
@@ -1172,10 +1170,9 @@ def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p").isNotNull())
         .select("p.w1", "p.w2")
     )
-    pc = (
+    pc = materialize(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
     )
     m1 = (
         pc.select(F.col("w1").alias("w"), "n_pair")
@@ -1527,10 +1524,9 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("bg.w1", "bg.w2")
     )
-    big = (
+    big = materialize(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
     )
     n_tot = float(big.count())  # scalar over the checkpointed model table
     w1w = Window.partitionBy("w1")
@@ -1650,11 +1646,10 @@ def text_kneser_ney_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("is_train"),
         )
     )
-    big = (
+    big = materialize(
         pairs.filter("is_train")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
     )
     w1m = big.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1_fwd")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
-from ..iterate import iterate
+from ..iterate import iterate, materialize
 from ..operators.graph import DAMP_DEN, DAMP_NUM, FP_ONE, _TELEPORT_FP
 from ..registry import register
 
@@ -129,11 +129,10 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= TR_SUPPORT)
         .select("u", "v")
     )
-    edges = (
+    edges = materialize(
         adj.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .union(adj.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     ranks = deg.select(

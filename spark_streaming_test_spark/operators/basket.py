@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.deterministic import dsum, sql_dsum
+from ..iterate import materialize, materialize_once
 from ..registry import register
-from ..session import register_frame_cache
 
 MIN_PAIR_SUPPORT = 2  # emit pairs seen in >= this many orders
 LIFT_DP = 8
@@ -115,28 +115,20 @@ REC_TOP_N = 5
 REC_MIN_PAIR = 2
 
 
-# Materialized distinct (order, part) set, memoized per (session,
-# sf_dir): the basket/recommender operators all start from this frame
-# and the self-join reads it twice more — localCheckpoint truncates the
-# recompute instead of re-scanning lineitem per consumer.
-_ITEMS_CACHE: dict[tuple[str, str], DataFrame] = register_frame_cache({})
-
-
 def _distinct_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(spark): a stopped+GC'd session's id() can be
-    # reused, handing a fresh session a checkpoint on a dead context.
-    # Other applications' entries are evicted so checkpoints don't leak.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ITEMS_CACHE:
-        for stale in [k for k in _ITEMS_CACHE if k[0] != key[0]]:
-            del _ITEMS_CACHE[stale]
-        _ITEMS_CACHE[key] = (
+    """Distinct (order, part) set, checkpointed once per SF: the
+    basket/recommender operators all start from this frame and the
+    self-join reads it twice more."""
+    return materialize_once(
+        spark,
+        sf_dir,
+        "distinct_items",
+        lambda: materialize(
             load(spark, sf_dir, "lineitem")
             .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
             .distinct()
-            .localCheckpoint(eager=True)
-        )
-    return _ITEMS_CACHE[key]
+        ),
+    )
 
 
 @register(
@@ -298,17 +290,16 @@ def rec_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
     by c and p and each half-step reads its layout)."""
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    ratings = (
+    ratings = materialize(
         F.broadcast(o)
         .join(li, o.o_orderkey == li.l_orderkey)
         .groupBy(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("r"))
-        .localCheckpoint(eager=True)
     )
     u1 = ratings.groupBy("c").agg(
         (F.sum("r").cast("double") / F.count(F.lit(1)).cast("double")).alias("u")
     )
-    v1 = (
+    v1 = materialize(
         ratings.join(u1, "c")
         .groupBy("p")
         .agg(
@@ -317,7 +308,6 @@ def rec_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v"),
             F.count(F.lit(1)).cast("bigint").alias("n_obs"),
         )
-        .localCheckpoint(eager=True)
     )
     u2 = (
         ratings.join(v1.select("p", "v"), "p")

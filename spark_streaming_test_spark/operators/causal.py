@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.deterministic import dsum, sql_dsum
+from ..iterate import materialize
 from ..registry import register
 
 _VARIANT_SQL = (
@@ -249,7 +250,7 @@ def ab_test_iptw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     single reduce. Every sum routes through the decimal helper, so
     the estimate is bitwise reproducible on any partitioning."""
     e = load(spark, sf_dir, "events")
-    users = (
+    users = materialize(
         e.groupBy("user_id")
         .agg(
             (F.count(F.lit(1)).cast("double") / IPTW_XSCALE).alias("x"),
@@ -274,7 +275,6 @@ def ab_test_iptw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100.0
             ).alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     w = [0.0, 0.0]
     for _ in range(IPTW_ITERS):

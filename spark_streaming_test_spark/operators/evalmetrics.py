@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
+from ..iterate import materialize
 from ..registry import register
 
 _DP = 8  # transcendental rounding, matches LOGPROB_DP in text_analysis
@@ -657,7 +658,7 @@ def distributed_row_number(df: DataFrame, order_cols: list) -> DataFrame:
     via a broadcast triangular self-join (O(P²) pairs of a P-row
     frame). order_cols must be a total order, which makes the output
     independent of where the sampled range boundaries land."""
-    local = _range_local_ranked(df, order_cols).localCheckpoint(eager=False)
+    local = materialize(_range_local_ranked(df, order_cols), eager=False)
     sizes = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     a, b = sizes.alias("a"), sizes.alias("b")
     offs = (
@@ -692,10 +693,11 @@ def distributed_prefix_sum(
     (The cum/tot decimal may widen a digit vs the one-window form —
     cast at the consumer.)"""
     wloc = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = (
-        _range_local_ranked(df, order_cols)
-        .withColumn("_lcum", F.sum(col).over(wloc))
-        .localCheckpoint(eager=False)
+    local = materialize(
+        _range_local_ranked(df, order_cols).withColumn(
+            "_lcum", F.sum(col).over(wloc)
+        ),
+        eager=False,
     )
     sizes = local.groupBy("_pid").agg(
         F.count(F.lit(1)).alias("_cnt"), F.sum(col).alias("_s")

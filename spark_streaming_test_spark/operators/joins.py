@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, spread
 from ..functions.deterministic import dsum, sql_dsum
+from ..iterate import materialize
 from ..registry import register
 
 
@@ -849,7 +850,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
     )
     try:
-        return _bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
+        return materialize(_bloom_join_frame(spark, sf_dir))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
         spark.conf.set(

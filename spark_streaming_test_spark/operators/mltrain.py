@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load, spread
 from ..functions.deterministic import dsum, sql_dsum
-from ..iterate import iterate
+from ..iterate import iterate, materialize
 from ..registry import register
 
 LR_ITERS = 3
@@ -110,7 +110,7 @@ def ml_logreg_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # call checkpoints afresh. Executor-loss tradeoff (as in graph's
     # _edge_index): a block lost with its executor fails the query
     # instead of recomputing from the parquet; the retry rebuilds it.
-    feat = (
+    feat = materialize(
         spread(load(spark, sf_dir, "events"))
         .select(
             F.when(F.col("event_type") == LR_LABEL, 1.0)
@@ -119,7 +119,6 @@ def ml_logreg_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("value") / 100.0).alias("x1"),
             (F.hour("ts").cast("double") / 24.0).alias("x2"),
         )
-        .localCheckpoint(eager=True)
     )
     w = [0.0, 0.0, 0.0]
     out = []
@@ -794,7 +793,7 @@ def ml_gbrt_boost2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gain"),
         )
         wr = Window.orderBy(F.desc("gain"), "feat", "threshold")
-        b = (
+        b = materialize(
             g.withColumn("rn", F.row_number().over(wr))
             .filter(F.col("rn") == 1)
             .select(
@@ -806,7 +805,6 @@ def ml_gbrt_boost2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("sr div nr").alias("vr"),
                 "gain",
             )
-            .localCheckpoint(eager=True)
         )
         out.append(
             b.select(
@@ -1043,13 +1041,13 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets), so even a corpus-sized calibration split never funnels
     through a single-task sort."""
     e = load(spark, sf_dir, "events")
-    feat = e.select(
+    feat = materialize(e.select(
         "event_id",
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("h"),
         F.col("value").alias("y"),
         (F.hour("ts").cast("double") / 24.0).alias("x1"),
         F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("x2"),
-    ).localCheckpoint(eager=True)
+    ))
     c = F.col
     m = feat.filter(c("h") >= "8").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -1243,13 +1241,13 @@ def ml_permutation_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     column (per-day frames — never a global sort), and one decimal
     MSE reduce scores it. O(features) passes, all map-side-combined."""
     e = spread(load(spark, sf_dir, "events"))
-    feat = e.select(
+    feat = materialize(e.select(
         "event_id",
         F.to_date("ts").alias("day"),
         F.col("value").alias("y"),
         (F.hour("ts").cast("double") / 24.0).alias("x1"),
         F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("x2"),
-    ).localCheckpoint(eager=True)
+    ))
     c = F.col
     m = feat.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -2103,10 +2101,9 @@ def ml_em_gmm_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache holds it; reset_query_state releases it), and a block lost
     # with its executor fails the query instead of recomputing from
     # the parquet; the retry rebuilds it.
-    data = (
+    data = materialize(
         spread(load(spark, sf_dir, "events"))
         .selectExpr(_EM_X)
-        .localCheckpoint(eager=True)
     )
     params = spark.sql("SELECT * FROM (VALUES (1)) t(z)").selectExpr(
         *_EM_INIT.replace("SELECT ", "").split(", ")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load, spread
+from ..iterate import materialize
 from ..registry import register
 
 METRIC_DP = 8  # ratios rounded to 8 dp: exact count ratios, stable in binary
@@ -1175,17 +1176,17 @@ def dq_merkle_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PREVIOUS level's frame — without lineage truncation every branch
     # re-derives from the table scan (5 full scans at 100 TB; caught by
     # test_merkle_single_table_scan).
-    level = rows_h.groupBy(F.col("leaf").alias("idx")).agg(
+    level = materialize(rows_h.groupBy(F.col("leaf").alias("idx")).agg(
         F.md5(F.concat_ws("", F.array_join(F.sort_array(F.collect_list("rh")), ""))).alias("h"),
         F.count(F.lit(1)).alias("n_rows"),
-    ).localCheckpoint(eager=True)
+    ))
     out = level.select(F.lit(0).alias("level"), "idx", F.col("h").alias("node_hash"), F.col("n_rows").cast("bigint"))
     lvl = 0
     n = MERKLE_LEAVES
     while n > 1:
         lvl += 1
         n //= MERKLE_FANOUT
-        level = (
+        level = materialize(
             level.groupBy(
                 (F.col("idx") / MERKLE_FANOUT).cast("int").alias("idx")
             )
@@ -1204,7 +1205,7 @@ def dq_merkle_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("h"),
                 F.sum("n_rows").alias("n_rows"),
             )
-        ).localCheckpoint(eager=True)
+        )
         out = out.unionAll(
             level.select(
                 F.lit(lvl).alias("level"), "idx",
@@ -1365,7 +1366,7 @@ def dq_merkle_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("eh"),
         F.when(F.col("c.bv") != F.col("c.ev"), 1).otherwise(0).alias("drift"),
     )
-    level = (
+    level = materialize(
         rows_h.groupBy("col", F.col("leaf").alias("idx"))
         .agg(
             F.md5(
@@ -1377,7 +1378,6 @@ def dq_merkle_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("drift").alias("n_diverged"),
         )
-        .localCheckpoint(eager=True)
     )
 
     def emit(lv: int, frame: DataFrame) -> DataFrame:
@@ -1397,7 +1397,7 @@ def dq_merkle_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     while n > 1:
         lvl += 1
         n //= MERKLE_FANOUT
-        level = (
+        level = materialize(
             level.groupBy(
                 "col", (F.col("idx") / MERKLE_FANOUT).cast("int").alias("idx")
             )
@@ -1423,7 +1423,6 @@ def dq_merkle_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_rows").alias("n_rows"),
                 F.sum("n_diverged").alias("n_diverged"),
             )
-            .localCheckpoint(eager=True)
         )
         out = out.unionAll(emit(lvl, level))
     return out

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.deterministic import davg, dsum, sql_davg, sql_dsum
+from ..iterate import materialize
 from ..registry import register
 
 EWMA_WIN = 24  # trailing hours folded into the smoothed value
@@ -2968,7 +2969,7 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mu"),
         ip(F.col("xs"), F.col("xs")).alias("q"),
     )
-    zs = (
+    zs = materialize(
         subs.filter(F.col("q") / wD - F.col("mu") * F.col("mu") > F.lit(0.0))
         .select(
             "event_type",
@@ -2978,15 +2979,13 @@ def ts_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mu",
             F.sqrt(F.col("q") / wD - F.col("mu") * F.col("mu")).alias("sig"),
         )
-        .localCheckpoint(eager=True)
     )
-    blocks = (
+    blocks = materialize(
         zs.select(
             "event_type",
             F.floor((F.col("i") - 1) / F.lit(MP_BLOCK)).alias("blk"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     npart = max(
         1, min(blocks.count(), 4 * spark.sparkContext.defaultParallelism)
@@ -4117,7 +4116,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wo = Window.partitionBy("event_type").orderBy("d")
     wall = Window.partitionBy("event_type")
-    pre = daily.select(
+    pre = materialize(daily.select(
         "event_type",
         F.row_number().over(wo).cast("bigint").alias("t"),
         F.sum("c")
@@ -4126,7 +4125,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
         F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
         F.sum("c").over(wall).cast("bigint").alias("stot"),
-    ).localCheckpoint(eager=True)
+    ))
 
     t, s, n, stot = F.col("t"), F.col("s"), F.col("n"), F.col("stot")
     g1 = pre.filter(
@@ -4141,7 +4140,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         (n * t * (n - t)).cast("bigint").alias("denom"),
     )
     wr = Window.partitionBy("event_type").orderBy(F.col("gain").desc(), "k")
-    b1 = (
+    b1 = materialize(
         g1.withColumn("rk", F.row_number().over(wr))
         .filter("rk = 1")
         .select(
@@ -4150,7 +4149,6 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rel_num").alias("rel1"),
             F.col("denom").alias("den1"),
         )
-        .localCheckpoint(eager=True)
     )
     seg2 = pre.join(F.broadcast(b1), "event_type").filter(t != F.col("k1")).select(
         "event_type",

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import SparkSession
 
 from spark_streaming_test_spark import cds
+from spark_streaming_test_spark.iterate import clear_memo
 
 
 # The directory that holds this package. get_spark puts it on the Python
@@ -102,29 +103,15 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
 
 # --- cross-query state reset (bench/sweep harness isolation) -------------------
 
-# Module caches that hold localCheckpointed DataFrames ACROSS query
-# invocations (basket items, co-purchase edges, HITS pairs). Harnesses
-# that unpersist RDD blocks between queries must clear these first:
-# a cached frame whose checkpoint blocks were dropped is unrecoverable
-# (lineage truncated), so the next cache hit would throw
-# CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.
-_CROSS_QUERY_FRAME_CACHES: list[dict] = []
-
-
-def register_frame_cache(cache: dict) -> dict:
-    """Register a module-level DataFrame cache for harness resets."""
-    _CROSS_QUERY_FRAME_CACHES.append(cache)
-    return cache
-
 
 def reset_query_state(spark: SparkSession) -> None:
     """Full cross-query isolation for benchmarking/sweeping: clear
-    every registered frame cache, the SQL cache manager, and ALL
-    persisted RDD blocks (catalog.clearCache does not touch RDD-layer
-    localCheckpoint persistence — measured: 60+ queries' accumulated
-    checkpoints slowed suite-tail iterative queries ~1.7x)."""
-    for cache in _CROSS_QUERY_FRAME_CACHES:
-        cache.clear()
+    the cross-query frame memo (``iterate.materialize_once``), the SQL
+    cache manager, and ALL persisted RDD blocks (catalog.clearCache does
+    not touch RDD-layer localCheckpoint persistence — measured: 60+
+    queries' accumulated checkpoints slowed suite-tail iterative
+    queries ~1.7x)."""
+    clear_memo()
     spark.catalog.clearCache()
     jrdds = spark.sparkContext._jsc.getPersistentRDDs()
     # Unpersisting a localCheckpointed RDD logs a WARN that its lineage

@@ -269,53 +269,6 @@ def write_alerts_kafka_wire(
     return writer.start()
 
 
-def read_kafka_wire_topic(
-    spark: SparkSession,
-    host: str,
-    port: int,
-    topic: str,
-    partitions: list[int] | None = None,
-) -> DataFrame:
-    """Batch READ of a Kafka topic over the fetch wire protocol — the
-    consume half of O14, per-task: one Spark task per topic-partition,
-    each opening its own socket and draining its slice via FetchRequest
-    v2 (absolute offsets in the response are the resume cursor). This
-    is exactly how the real Kafka source divides work — partitions are
-    the parallelism unit; the driver never touches record bytes.
-
-    Returns (topic, partition, offset, key, value, timestamp_ms)."""
-    parts = partitions if partitions is not None else [0]
-    spec = spark.createDataFrame(
-        [(topic, p) for p in parts], "topic string, partition int"
-    ).repartition(len(parts), "partition")
-
-    def drain(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spark_streaming_test_spark.sources.kafka_wire import (
-            KafkaWireConsumer,
-        )
-
-        for pdf in batches:
-            rows = []
-            for t, p in zip(pdf["topic"], pdf["partition"]):
-                with KafkaWireConsumer(host, port) as consumer:
-                    for off, key, value, ts in consumer.fetch_all(str(t), int(p)):
-                        rows.append((str(t), int(p), off, key, value, ts))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "topic", "partition", "offset", "key", "value", "timestamp_ms",
-                ],
-            )
-
-    return spec.mapInPandas(
-        drain,
-        schema=(
-            "topic string, partition int, offset bigint, key binary, "
-            "value binary, timestamp_ms bigint"
-        ),
-    )
-
-
 def enrich_with_dim(stream_df: DataFrame, dim_df: DataFrame, join_expr) -> DataFrame:
     """Stream-static join: enrich a live stream against a batch
     dimension. The static side is broadcast into every micro-batch —

@@ -3,19 +3,103 @@
 The three lessons the harness encodes are each pinned: per-round
 lineage truncation (plan size independent of round count — the
 O(rounds²) broadcast-recompute class), correct fixpoint semantics for
-monotone probes, and the refuse-to-emit-unconverged guard.
+monotone probes, and the refuse-to-emit-unconverged guard. So are the
+module's two monopolies: it is the only caller of ``localCheckpoint``,
+and ``materialize_once`` is the only cross-query frame memo, with its
+key, eviction and reset policy.
 """
 
 from __future__ import annotations
 
+import pathlib
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
+import spark_streaming_test_spark
+from spark_streaming_test_spark import iterate as it
 from spark_streaming_test_spark.iterate import (
     iterate,
     iterate_state,
     materialize,
 )
+from spark_streaming_test_spark.session import reset_query_state
+
+
+def test_only_iterate_calls_local_checkpoint():
+    """Every lineage cut goes through materialize (and its asserted
+    truncation): no module but iterate.py calls localCheckpoint."""
+    root = pathlib.Path(spark_streaming_test_spark.__file__).parent
+    calls = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "iterate.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line
+    ]
+    assert not calls, f"localCheckpoint outside iterate.py: {calls}"
+
+
+def _stub_spark(app_id: str) -> SimpleNamespace:
+    """Enough of a SparkSession for materialize_once and
+    reset_query_state, with no persisted RDDs."""
+    no_rdds = SimpleNamespace(
+        keySet=lambda: SimpleNamespace(toArray=lambda: [])
+    )
+    level = SimpleNamespace(name=lambda: "WARN")
+    logger = SimpleNamespace(getLevel=lambda: level)
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(
+            applicationId=app_id,
+            _jsc=SimpleNamespace(getPersistentRDDs=lambda: no_rdds),
+            setLogLevel=lambda _level: None,
+        ),
+        catalog=SimpleNamespace(clearCache=lambda: None),
+        _jvm=SimpleNamespace(org=SimpleNamespace(apache=SimpleNamespace(
+            logging=SimpleNamespace(log4j=SimpleNamespace(
+                LogManager=SimpleNamespace(getRootLogger=lambda: logger)
+            ))
+        ))),
+    )
+
+
+def test_materialize_once_key_eviction_and_reset(monkeypatch):
+    """The memo's key is (applicationId, sf_dir, name): the same
+    (sf_dir, name) hits, another name misses, a new application evicts
+    every entry of the old one, and reset_query_state empties it."""
+    monkeypatch.setattr(it, "_MEMO", {})
+    builds: list[str] = []
+
+    def build(tag):
+        def _build():
+            builds.append(tag)
+            return (tag, len(builds))
+
+        return _build
+
+    app1, app2 = _stub_spark("app-1"), _stub_spark("app-2")
+    first = it.materialize_once(app1, "/sf", "edges", build("e"))
+    assert it.materialize_once(app1, "/sf", "edges", build("x")) is first
+    assert builds == ["e"]
+
+    other = it.materialize_once(app1, "/sf", "items", build("i"))
+    assert other == ("i", 2) and builds == ["e", "i"]
+    it.materialize_once(app1, "/sf2", "items", build("i2"))
+    assert set(it._MEMO) == {
+        ("app-1", "/sf", "edges"),
+        ("app-1", "/sf", "items"),
+        ("app-1", "/sf2", "items"),
+    }
+
+    it.materialize_once(app2, "/sf", "edges", build("e2"))
+    assert set(it._MEMO) == {("app-2", "/sf", "edges")}
+    assert builds == ["e", "i", "i2", "e2"]
+
+    reset_query_state(app2)
+    assert it._MEMO == {}
+    it.materialize_once(app2, "/sf", "edges", build("e3"))
+    assert builds[-1] == "e3"
 
 
 def _logical_size(df) -> int:

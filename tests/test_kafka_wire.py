@@ -26,7 +26,6 @@ from spark_streaming_test_spark.streaming.pipeline import (
     INFO_MSG,
     edge_trigger_stream,
     packet_stream_from_dir,
-    read_kafka_wire_topic,
     write_alerts_kafka_wire,
 )
 
@@ -363,8 +362,11 @@ def test_kafka_wire_batch_format_read(spark):
 def test_kafka_wire_produce_consume_loop_through_spark(spark, tmp_path):
     """Full loop over real sockets, both directions executor-side:
     alerts stream through the foreachPartition PRODUCER, then a batch
-    DataFrame READS the topic back via per-task FetchRequests — the
-    values recovered through the wire must equal the emitted alerts."""
+    spark.read.format("kafka_wire") READS the topic back via per-task
+    FetchRequests — the values recovered through the wire must equal
+    the emitted alerts."""
+    from spark_streaming_test_spark.sources import kafka_wire_source
+
     src = str(tmp_path / "in")
     _write_packet_batch(
         spark,
@@ -385,7 +387,14 @@ def test_kafka_wire_produce_consume_loop_through_spark(spark, tmp_path):
             q.processAllAvailable()
         finally:
             q.stop()
-        df = read_kafka_wire_topic(spark, broker.host, broker.port, "alerts")
+        kafka_wire_source.register(spark)
+        df = (
+            spark.read.format("kafka_wire")
+            .option("host", broker.host)
+            .option("port", str(broker.port))
+            .option("topic", "alerts")
+            .load()
+        )
         rows = df.collect()
     values = sorted(bytes(r["value"]).decode() for r in rows)
     assert values == sorted([ALERT_MSG, INFO_MSG, ALERT_MSG])

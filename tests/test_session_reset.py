@@ -1,19 +1,18 @@
 """Cross-query state-reset contract (session.reset_query_state).
 
 The bench/sweep harnesses call ``reset_query_state`` between queries to
-drop ALL persisted RDD blocks (including localCheckpoint blocks).  Any
-module-level cache holding DataFrames across query invocations must be
-registered via ``session.register_frame_cache`` so the reset also clears
-the cache — otherwise the next cache hit returns either
+drop ALL persisted RDD blocks (including localCheckpoint blocks).  Every
+checkpointed frame kept across queries lives in the one memo behind
+``iterate.materialize_once``, which the reset clears first — otherwise
+the next memo hit returns either
 
 - a lineage-truncated checkpointed frame whose blocks are gone
-  (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — the retrieval token cache, or
+  (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — the retrieval token table, or
 - a silently-unpersisted frame that re-derives its input per use —
-  the graph edge cache.
+  the graph edge index.
 
-These tests pin the contract for the two caches ADVICE r11 found
-unregistered, and the registry-wide invariant that every module-level
-DataFrame-holding cache is registered.
+These tests pin the contract for those two memo entries, and the
+registry-wide invariant that no module keeps its own frame cache.
 """
 
 from __future__ import annotations
@@ -23,8 +22,7 @@ import subprocess
 import sys
 import textwrap
 
-from pyspark import StorageLevel
-
+from spark_streaming_test_spark import iterate
 from spark_streaming_test_spark import session as sess
 from spark_streaming_test_spark.llm import retrieval
 from spark_streaming_test_spark.operators import graph
@@ -35,11 +33,11 @@ def test_prf_token_cache_survives_reset(spark, sf_dir):
     must rebuild (fresh checkpoint), not serve the dead one."""
     first = retrieval._cached_tokens(spark, sf_dir)
     n1 = first.count()
-    assert retrieval._PRF_TOKS_CACHE, "cache should be populated"
-    sess.reset_query_state(spark)
-    assert not retrieval._PRF_TOKS_CACHE, (
-        "reset must clear the registered PRF token cache"
+    assert any(k[1:] == (sf_dir, "prf_tokens") for k in iterate._MEMO), (
+        "the token table should be in the memo"
     )
+    sess.reset_query_state(spark)
+    assert not iterate._MEMO, "reset must clear the frame memo"
     second = retrieval._cached_tokens(spark, sf_dir)
     # The old frame's checkpoint blocks are gone; this count would throw
     # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND if the stale frame were served.
@@ -64,7 +62,7 @@ def test_edge_cache_repersists_after_reset(spark, sf_dir):
     assert _is_checkpointed(edges) and _is_checkpointed(deg)
     assert n_nodes > 0
     sess.reset_query_state(spark)
-    assert not graph._EDGE_CACHE, "reset must clear the edge cache"
+    assert not iterate._MEMO, "reset must clear the frame memo"
     edges2, deg2, n_nodes2 = graph._edge_index(spark, sf_dir)
     assert _is_checkpointed(edges2), "rebuilt edges must be materialized"
     assert _is_checkpointed(deg2), "rebuilt degree frame must be materialized"
@@ -74,39 +72,32 @@ def test_edge_cache_repersists_after_reset(spark, sf_dir):
 
 
 def test_all_dataframe_caches_are_registered():
-    """Registry-wide invariant: any module-level dict cache whose values
-    can hold DataFrames (name ends in _CACHE) in operator/llm modules is
-    registered with session.register_frame_cache.  Catches the next
-    unregistered cache before ADVICE does."""
+    """Registry-wide invariant: frames kept across queries live only in
+    iterate.materialize_once's memo, which the reset clears. Any
+    module-level dict named *_CACHE in operator/llm modules must be a
+    plain-value cache declared in its module's _PLAIN_CACHES; a new
+    hand-rolled frame cache fails here."""
     import importlib
     import pkgutil
 
     import spark_streaming_test_spark.llm as llm_pkg
     import spark_streaming_test_spark.operators as ops_pkg
 
-    # Import ALL modules before snapshotting the registry — importing a
-    # module during the scan registers its caches, so a pre-scan
-    # snapshot would miss any module first imported by the scan itself.
-    mods = [
-        importlib.import_module(f"{pkg.__name__}.{info.name}")
-        for pkg in (ops_pkg, llm_pkg)
-        for info in pkgutil.iter_modules(pkg.__path__)
-    ]
-    registered = {id(c) for c in sess._CROSS_QUERY_FRAME_CACHES}
-    unregistered = []
-    for mod in mods:
-        for name, val in vars(mod).items():
-            if not name.endswith("_CACHE") or not isinstance(val, dict):
-                continue
-            # Plain-value caches (seed lists, centroid arrays) hold
-            # no Spark state and opt out via _PLAIN_CACHES.
+    undeclared = []
+    for pkg in (ops_pkg, llm_pkg):
+        for info in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
             plain = getattr(mod, "_PLAIN_CACHES", ())
-            if name in plain:
-                continue
-            if id(val) not in registered:
-                unregistered.append(f"{mod.__name__}.{name}")
-    assert not unregistered, (
-        f"module-level frame caches not registered for reset: {unregistered}"
+            for name, val in vars(mod).items():
+                if (
+                    name.endswith("_CACHE")
+                    and isinstance(val, dict)
+                    and name not in plain
+                ):
+                    undeclared.append(f"{mod.__name__}.{name}")
+    assert not undeclared, (
+        "module-level caches outside iterate.materialize_once: "
+        f"{undeclared}"
     )
 
 
