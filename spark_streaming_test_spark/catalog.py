@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .iterate import materialize, materialize_once
+
 TABLES = [
     "region",
     "nation",
@@ -73,6 +75,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 field.name, F.col(field.name).cast(T.TimestampType())
             )
     return df
+
+
+def distinct_order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct lineitem (order ``ok``, part ``pk``) pairs, checkpointed
+    once per SF: the basket/recommender operators and the co-purchase
+    graphs all start from this frame."""
+    return materialize_once(
+        spark,
+        sf_dir,
+        "distinct_items",
+        lambda: materialize(
+            load(spark, sf_dir, "lineitem")
+            .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+            .distinct()
+        ),
+    )
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

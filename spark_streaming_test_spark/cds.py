@@ -39,6 +39,7 @@ import os
 import re
 import shutil
 import subprocess
+from collections.abc import Callable
 from typing import NamedTuple
 
 # The JDK the archive flags were measured on; 13-16 have them too.
@@ -54,10 +55,12 @@ LOG_OPTIONS = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
 EXIT_TIMEOUT_S = 300
 
 
-def cache_dir() -> str:
+def cache_dir(kind: str = "cds") -> str:
+    """``$XDG_CACHE_HOME/spark-graft/<kind>``: ``cds`` for the archives,
+    ``jvm`` for the compiled operator jars."""
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache")
-    return os.path.join(base, "spark-graft", "cds")
+    return os.path.join(base, "spark-graft", kind)
 
 
 def archive_key(libjvm: str, conf_dir: str, jars: list[str]) -> str:
@@ -84,14 +87,20 @@ def java_home() -> str | None:
     return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
 
 
-def java_major(home: str) -> int:
-    """Feature release of the JDK at ``home`` from its ``release`` file;
-    0 when unknown."""
+def java_version(home: str) -> str:
+    """``JAVA_VERSION`` of the JDK at ``home`` from its ``release`` file;
+    empty when unknown."""
     try:
         with open(os.path.join(home, "release")) as f:
-            m = re.search(r'^JAVA_VERSION="(?:1\.)?(\d+)', f.read(), re.M)
+            m = re.search(r'^JAVA_VERSION="([^"]*)"', f.read(), re.M)
     except OSError:
-        return 0
+        return ""
+    return m.group(1) if m else ""
+
+
+def java_major(home: str) -> int:
+    """Feature release of the JDK at ``home``; 0 when unknown."""
+    m = re.match(r"(?:1\.)?(\d+)", java_version(home))
     return int(m.group(1)) if m else 0
 
 
@@ -146,9 +155,7 @@ class Dump:
             return
         try:
             self._stop_jvm()
-            if os.path.exists(self.part) and self.check(self.part):
-                os.replace(self.part, self.archive)
-                prune(self.cache, keep=self.archive)
+            install(self.part, self.archive, self.check)
         finally:
             self.release()
 
@@ -188,10 +195,26 @@ class Dump:
             self.proc.wait()
 
 
+def install(part: str, final: str, valid: Callable[[str], bool]) -> None:
+    """Rename ``part`` to ``final`` when ``valid(part)``, then prune the
+    cache; remove ``part`` otherwise. Called with the cache's lock held."""
+    try:
+        if os.path.exists(part) and valid(part):
+            os.replace(part, final)
+            prune(os.path.dirname(final), keep=final)
+    finally:
+        try:
+            os.remove(part)
+        except FileNotFoundError:
+            pass
+
+
 def prune(cache: str, keep: str) -> None:
-    """Remove every archive and leftover part but ``keep``; called with
-    the lock held, so no other dump is under way."""
-    for path in glob.glob(os.path.join(cache, "*.jsa")) + glob.glob(
+    """Remove every file of ``keep``'s kind (its suffix) and every
+    leftover part but ``keep``; called with the lock held, so no other
+    writer is under way."""
+    suffix = os.path.splitext(keep)[1]
+    for path in glob.glob(os.path.join(cache, f"*{suffix}")) + glob.glob(
             os.path.join(cache, "*.part")):
         if path != keep:
             try:
@@ -200,11 +223,12 @@ def prune(cache: str, keep: str) -> None:
                 pass
 
 
-def _lock(cache: str) -> int | None:
-    """The cache's lock, or None when another launch holds it."""
+def _lock(cache: str, wait: bool = False) -> int | None:
+    """The cache's lock; without ``wait``, None when another process
+    holds it."""
     fd = os.open(os.path.join(cache, "dump.lock"), os.O_RDWR | os.O_CREAT, 0o644)
     try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        fcntl.flock(fd, fcntl.LOCK_EX | (0 if wait else fcntl.LOCK_NB))
     except BlockingIOError:
         os.close(fd)
         return None
@@ -252,15 +276,21 @@ def plan(spark_home: str) -> Launch | None:
     return Launch(f"-XX:SharedArchiveFile={archive} {LOG_OPTIONS}", conf)
 
 
+def launches_jvm() -> bool:
+    """Whether the next ``getOrCreate`` launches the driver JVM: no
+    gateway yet, and not running under ``spark-submit``, whose JVM is
+    already up."""
+    from pyspark import SparkContext
+
+    return SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+
+
 def get_or_create(builder):
     """``builder.getOrCreate()``, launching the driver JVM with the
     archive when this call is the one that launches it."""
-    from pyspark import SparkContext
     from pyspark.find_spark_home import _find_spark_home
 
-    launch = None
-    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        launch = plan(_find_spark_home())
+    launch = plan(_find_spark_home()) if launches_jvm() else None
     if launch is None:
         return builder.getOrCreate()
     saved = os.environ.get("SPARK_CONF_DIR")

@@ -7,9 +7,9 @@ pair-generation-within-a-bounded-group shape as the LSH band join
 quadratic step is bounded by basket size (TPC-H orders hold <= 7
 items), never by the catalog.
 
-Plan: distinct (order, part) -> self-join on l_orderkey (both sides
-identical subtrees, shuffle-hash hinted => AQE ReusedExchange computes
-the scan once) -> pair counts with map-side partials -> two broadcast
+Plan: distinct (order, part), checkpointed once per SF
+(``catalog.distinct_order_parts``) -> self-join on l_orderkey (both
+sides read the checkpoint, shuffle-hash hinted) -> pair counts with map-side partials -> two broadcast
 joins against the item-marginal frame (catalog-sized, tiny vs the fact
 table). Lift arithmetic is integer-valued doubles (< 2^53 — exact),
 rounded at output.
@@ -20,9 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import distinct_order_parts, load
 from ..functions.deterministic import dsum, sql_dsum
-from ..iterate import materialize, materialize_once
+from ..iterate import materialize
 from ..registry import register
 
 MIN_PAIR_SUPPORT = 2  # emit pairs seen in >= this many orders
@@ -60,11 +60,7 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Part pairs co-occurring in >= {MIN_PAIR_SUPPORT} orders with
     their lift: P(a,b) / (P(a)·P(b)) over the order universe. Lift > 1
     means the pair attracts; < 1 repels."""
-    items = (
-        load(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
+    items = distinct_order_parts(spark, sf_dir)
     a = items.select(F.col("ok"), F.col("pk").alias("part_a")).hint(
         "shuffle_hash"
     )
@@ -113,22 +109,6 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REC_TOP_N = 5
 REC_MIN_PAIR = 2
-
-
-def _distinct_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (order, part) set, checkpointed once per SF: the
-    basket/recommender operators all start from this frame and the
-    self-join reads it twice more."""
-    return materialize_once(
-        spark,
-        sf_dir,
-        "distinct_items",
-        lambda: materialize(
-            load(spark, sf_dir, "lineitem")
-            .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-            .distinct()
-        ),
-    )
 
 
 @register(
@@ -185,7 +165,7 @@ def rec_item_item_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a correctly-rounded sqrt, one division — bitwise identical in any
     engine. At 100 TB the pair table is the only large intermediate
     and it shrinks with the support floor."""
-    items = _distinct_items(spark, sf_dir)
+    items = distinct_order_parts(spark, sf_dir)
     # The materialized item set feeds three consumers (both self-join
     # sides and the marginals) — one scan+distinct, not three; the
     # graph module's checkpointed-edges pattern.

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import bounded_broadcast, load
+from ..catalog import bounded_broadcast, distinct_order_parts, load
 from ..registry import register
 from ..iterate import iterate, iterate_state, materialize, materialize_once
 
@@ -280,11 +280,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     support."""
 
     def build() -> DataFrame:
-        items = (
-            load(spark, sf_dir, "lineitem")
-            .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-            .distinct()
-        )
+        items = distinct_order_parts(spark, sf_dir)
         a = items.select("ok", F.col("pk").alias("u")).hint("shuffle_hash")
         b = items.select("ok", F.col("pk").alias("v")).hint("shuffle_hash")
         return materialize(
@@ -2654,11 +2650,7 @@ def _mst_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted co-purchase edges with UNIQUE weights: the n_orders
     support inverted into a distance-like weight, tie-broken by the
     (u, v) pair itself so no two edges weigh the same (unique MSF)."""
-    items = (
-        load(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .distinct()
-    )
+    items = distinct_order_parts(spark, sf_dir)
     a = items.select("ok", F.col("pk").alias("u")).hint("shuffle_hash")
     b = items.select("ok", F.col("pk").alias("v")).hint("shuffle_hash")
     sup = (
@@ -3045,13 +3037,7 @@ def _bw_core(spark: SparkSession, sf_dir: str) -> tuple:
     for why the support filter is wrong for this family."""
 
     def build() -> tuple:
-        items = (
-            load(spark, sf_dir, "lineitem")
-            .select(
-                F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-            )
-            .distinct()
-        )
+        items = distinct_order_parts(spark, sf_dir)
         a = items.select("ok", F.col("pk").alias("u")).hint("shuffle_hash")
         b = items.select("ok", F.col("pk").alias("v")).hint("shuffle_hash")
         edges = (

@@ -12,15 +12,16 @@ from __future__ import annotations
 
 import os
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-from spark_streaming_test_spark import cds
+from spark_streaming_test_spark import cds, jvm
 from spark_streaming_test_spark.iterate import clear_memo
 
 
 # The directory that holds this package. get_spark puts it on the Python
-# workers' path: the worker daemon and executor-side imports (the Kafka
-# sink's ``foreachPartition``) must not depend on the JVM's cwd.
+# workers' path: the worker daemon and executor-side imports of the
+# package's pandas UDFs must not depend on the JVM's cwd.
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -91,6 +92,14 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
     )
+    # The edge-trigger state machine's jar (jvm), on the driver's
+    # application class loader; only the launching call can add it.
+    # Without javac and a cached jar the session starts without it, and
+    # only edge_trigger_stream fails.
+    if cds.launches_jvm():
+        jar = jvm.edge_trigger_jar(_find_spark_home())
+        if jar is not None:
+            builder = builder.config("spark.jars", jar)
     if "SPARK_GRAFT_DRIVER_MEMORY" in os.environ:
         builder = builder.config(
             "spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEMORY"]

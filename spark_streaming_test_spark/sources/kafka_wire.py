@@ -49,10 +49,10 @@ from the spec:
   at-least-once retry.
 
 Scale posture: the Spark-facing sink (``streaming/pipeline.py::
-kafka_wire_sink``) produces from ``foreachPartition`` — one socket per
-task, records never collected to the driver — exactly how real Kafka
-clients are deployed under foreachBatch. The stub broker is for tests;
-the producer speaks the same bytes to a real broker.
+kafka_wire_batch_sink``) produces each micro-batch's edge-triggered
+alerts from the driver, one produce request per batch: the rows are
+O(keys whose alert flag flipped), not the packet stream. The stub broker
+is for tests; the producer speaks the same bytes to a real broker.
 
 Wire layout used (all big-endian, spec names):
 

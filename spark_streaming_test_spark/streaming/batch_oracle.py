@@ -194,8 +194,8 @@ def stream_edge_trigger_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes; first observation always sends) in batch form: lag over the
     per-key window sequence, keep rows where the flag flips.
 
-    The true streaming form (applyInPandasWithState with per-key
-    {last_alert} state, checkpointed and globally consistent — fixing
+    The true streaming form (a JVM flatMapGroupsWithState with a per-key
+    boolean flag, checkpointed and globally consistent — fixing
     the reference's per-JVM static-map bug, SURVEY.md §4.3) is
     ``streaming.pipeline.edge_trigger_stream`` and is tested in
     tests/test_streaming.py; on any bounded input both produce exactly

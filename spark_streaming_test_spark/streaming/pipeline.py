@@ -16,23 +16,28 @@ Streaming query, in two flavors:
     alerts handed to ``foreachBatch(kafka_wire_batch_sink(...))`` —
     batch boundaries define the window exactly as MainApp.java:26,38.
 
-The edge-trigger dedup is a keyed stateful operator
-(``applyInPandasWithState``) with per-NIC state {last_alert: bool} —
-globally consistent and checkpointed, deliberately fixing the
-reference's per-executor-JVM static map (KafkaProducer.java:15, see
-SURVEY.md §4.3: the reference re-sends on executor reassignment and
-loses state on restart; we do not replicate the bug).
+The edge-trigger dedup is a keyed stateful operator, a JVM
+``flatMapGroupsWithState`` (``jvm/EdgeTrigger.java``, compiled by
+``session.get_spark``) with a per-NIC boolean flag — globally consistent
+and checkpointed, deliberately fixing the reference's per-executor-JVM
+static map (KafkaProducer.java:15, see SURVEY.md §4.3: the reference
+re-sends on executor reassignment and loses state on restart; we do not
+replicate the bug). No Python worker runs on the alert path: the state
+function is Java and the Kafka-wire sink produces from the driver.
 
 Scale: state is one boolean per NIC key — O(distinct keys) cluster-wide,
 partitioned by key hash; the windowed agg before it is the only shuffle.
+Alert rows are O(keys whose flag flipped in the batch).
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
+from py4j.java_gateway import JavaClass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +45,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.traffic import ALERT_MSG, INFO_MSG
+from ..sources.kafka_wire import KafkaWireProducer
 
 # Packet-stream schema: FIXTURES.md §12 — (nif, raw|bytes, ts); the
 # reference element is Tuple2<String nifName, byte[] raw>
@@ -91,44 +97,6 @@ def windowed_totals_stream(
     )
 
 
-def _edge_trigger_fn(
-    max_limit: float, ttl_ms: int | None
-) -> Callable[..., Iterator[pd.DataFrame]]:
-    """Build the applyInPandasWithState function for the O13 state machine.
-
-    Truth table (KafkaProducer.java:35-40): state absent -> emit;
-    is_alert != stored flag -> emit; else suppress. State updates on
-    every observation. Input rows are per-key batch totals. With
-    ``ttl_ms`` a key silent that long is evicted, emitting nothing."""
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (nif,) = key
-        total = 0.0
-        for pdf in pdfs:
-            total += float(pdf["total_bytes"].sum())
-        is_alert = total > max_limit
-        prev = state.get if state.exists else None
-        state.update((bool(is_alert),))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if prev is None or prev[0] != is_alert:
-            yield pd.DataFrame(
-                {
-                    "nif": [nif],
-                    "total_bytes": [total],
-                    "is_alert": [is_alert],
-                    "message": [ALERT_MSG if is_alert else INFO_MSG],
-                }
-            )
-
-    return fn
-
-
 def edge_trigger_stream(
     totals: DataFrame, max_limit: float, ttl_ms: int | None = None
 ) -> DataFrame:
@@ -146,17 +114,27 @@ def edge_trigger_stream(
     its next observation, like a new key. A processing-time timeout
     keeps the engine running no-data batches, so a query with a TTL
     never goes idle (``processAllAvailable`` does not return)."""
-    return totals.groupBy("nif").applyInPandasWithState(
-        _edge_trigger_fn(max_limit, ttl_ms),
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=T.StructType([T.StructField("last_alert", T.BooleanType())]),
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    spark = totals.sparkSession
+    trigger = spark._jvm.sparkgraft.EdgeTrigger
+    if not isinstance(trigger, JavaClass):
+        raise RuntimeError(
+            "edge_trigger_stream runs the JVM class sparkgraft.EdgeTrigger, "
+            "which session.get_spark compiles with javac and caches; this "
+            "session was launched without it (no javac and no cached jar, "
+            "or not launched by get_spark)"
+        )
+    jdf = trigger.apply(
+        totals.select(
+            F.col("nif").cast("string").alias("nif"),
+            F.col("total_bytes").cast("double").alias("total_bytes"),
+        )._jdf,
+        float(max_limit),
+        -1 if ttl_ms is None else int(ttl_ms),
+        ALERT_MSG,
+        INFO_MSG,
+        ALERT_SCHEMA.json(),
     )
+    return DataFrame(jdf, spark)
 
 
 def write_alerts_kafka(
@@ -200,40 +178,31 @@ def kafka_wire_batch_sink(
     null key, the alert message string as the value
     (KafkaProducer.java:17,38 — ``new ProducerRecord<>(topic, alert)``).
 
-    Scale posture: produced from ``foreachPartition`` — one socket per
-    task, rows never collected to the driver, the standard
-    Kafka-client-under-foreachBatch deployment. Delivery is
+    Produced from the driver: each batch's messages are collected in one
+    job and sent as one produce request through one producer, so no
+    Python worker runs in the batch's tasks. Alert rows are O(keys whose
+    flag flipped in the batch) — keeping them few is what the edge
+    trigger is for — and a batch larger than
+    ``spark.driver.maxResultSize`` fails its collect. Delivery is
     at-least-once with acks=1 (foreachBatch replays a failed batch and
     the producer retries retriable errors); acks=0 reproduces the
     reference's fire-and-forget at-most-once (SURVEY §4.3).
     ``message_format`` ('v1'|'v2'|'auto' — ApiVersions negotiation) and
-    ``compression`` ('none'|'gzip'|'snappy'|'lz4'|'zstd') pass straight to the
-    producer: each TASK compresses its own batch executor-side, so the
-    bytes-on-wire saving scales with parallelism."""
+    ``compression`` ('none'|'gzip'|'snappy'|'lz4'|'zstd') pass straight to
+    the producer."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        def send_partition(rows) -> None:
-            import time as _time
-
-            from spark_streaming_test_spark.sources.kafka_wire import (
-                KafkaWireProducer,
-            )
-
-            now_ms = int(_time.time() * 1000)
-            records = [
-                (None, row["message"].encode("utf-8"), now_ms) for row in rows
-            ]
-            if not records:
-                return
-            with KafkaWireProducer(
-                host,
-                port,
-                message_format=message_format,
-                compression=compression,
-            ) as producer:
-                producer.produce(topic, records, acks=acks)
-
-        batch_df.select("message").foreachPartition(send_partition)
+        now_ms = int(time.time() * 1000)
+        records = [
+            (None, row["message"].encode("utf-8"), now_ms)
+            for row in batch_df.select("message").collect()
+        ]
+        if not records:
+            return
+        with KafkaWireProducer(
+            host, port, message_format=message_format, compression=compression
+        ) as producer:
+            producer.produce(topic, records, acks=acks)
 
     return write
 

@@ -197,7 +197,7 @@ def test_kafka_wire_live_edge_trigger_delivery(spark, tmp_path):
 
 def test_kafka_wire_delivery_survives_retriable_nack(spark, tmp_path):
     """The broker nacks the first produce request (retriable); the
-    foreachPartition producer retries within the same batch and every
+    sink's producer retries within the same batch and every
     alert still lands exactly once in the broker log."""
     src = str(tmp_path / "in")
     _write_packet_batch(
@@ -221,6 +221,49 @@ def test_kafka_wire_delivery_survives_retriable_nack(spark, tmp_path):
         values = sorted(v.decode() for _, v, _ in broker.fetch("alerts"))
         assert broker.requests_seen >= 2  # nack + successful retry
     assert values == sorted([ALERT_MSG, INFO_MSG])
+
+
+def test_kafka_wire_alert_path_runs_no_python_worker(spark, tmp_path):
+    """The live alert query runs its state machine in the JVM
+    (``FlatMapGroupsWithState``, no pandas state operator or Python
+    evaluation in the executed plan) and produces from the driver: one
+    produce request per batch that emits, none for a batch that
+    emits nothing, however many state partitions the alerts come from."""
+    src = str(tmp_path / "in")
+    nifs = [f"eth{i}" for i in range(8)]
+    batches = [
+        [(n, 200.0, _ts(0)) for n in nifs],  # 8 first observations
+        [(n, 220.0, _ts(5)) for n in nifs],  # all suppressed
+        [(n, 80.0, _ts(10)) for n in nifs[:5]],  # 5 flips
+    ]
+    _write_packet_batch(spark, src, batches[0], 0)
+    totals = packet_stream_from_dir(spark, src).select(
+        "nif", F.col("bytes").alias("total_bytes")
+    )
+    alerts = edge_trigger_stream(totals, max_limit=150.0)
+    requests, records, plans = [], [], []
+    with MiniKafkaBroker() as broker:
+        q = write_alerts_kafka_wire(
+            alerts, broker.host, broker.port, checkpoint=str(tmp_path / "chk")
+        )
+        try:
+            for i in range(len(batches)):
+                if i:
+                    _write_packet_batch(spark, src, batches[i], i)
+                q.processAllAvailable()
+                requests.append(broker.requests_seen)
+                records.append(len(broker.fetch("alerts")))
+                plans.append(
+                    q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+                )
+        finally:
+            q.stop()
+    assert records == [8, 8, 13]
+    assert requests == [1, 1, 2]
+    for plan in plans:
+        assert "FlatMapGroupsWithState" in plan, plan
+        for node in ("InPandas", "PythonRDD", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
 
 
 def test_kafka_wire_exact_bytes_parity_with_oracle_format(spark, sf_dir):
@@ -360,8 +403,8 @@ def test_kafka_wire_batch_format_read(spark):
 
 
 def test_kafka_wire_produce_consume_loop_through_spark(spark, tmp_path):
-    """Full loop over real sockets, both directions executor-side:
-    alerts stream through the foreachPartition PRODUCER, then a batch
+    """Full loop over real sockets: alerts stream through the sink's
+    driver-side PRODUCER, then a batch
     spark.read.format("kafka_wire") READS the topic back via per-task
     FetchRequests — the values recovered through the wire must equal
     the emitted alerts."""
