@@ -1,20 +1,25 @@
-"""JVM-side operators, compiled once per source, Spark release and JDK.
+"""JVM-side classes of the engine, compiled once per source set, Spark
+release and JDK into one jar.
 
-``EdgeTrigger.java`` is the edge-trigger state machine that
-``streaming.pipeline.edge_trigger_stream`` runs as a
-``flatMapGroupsWithState``: a JVM function keeps Python workers off the
-alert stream's per-batch path.
+- ``EdgeTrigger.java`` is the edge-trigger state machine that
+  ``streaming.pipeline.edge_trigger_stream`` runs as a
+  ``flatMapGroupsWithState``: a JVM function keeps Python workers off the
+  alert stream's per-batch path.
+- ``LocalCheckpointFileManager.java`` is the session's streaming
+  checkpoint manager (``CHECKPOINT_MANAGER``): Hadoop's FileSystem-based
+  one, except that on ``file:`` it sets each checkpoint file's mode with
+  one ``chmod(2)`` where Hadoop without libhadoop forks a ``chmod``.
 
-``edge_trigger_jar`` compiles it with the JDK's ``javac`` (``cds.java_home``)
-against ``$SPARK_HOME/jars/*`` and caches the jar beside the class
-archive, in ``$XDG_CACHE_HOME/spark-graft/jvm/<key>.jar``, keyed by the
-source's sha256, the Spark release and the JDK release. It is published
-like the archive: under the cache's lock ``javac``'s classes are zipped
-to ``<key>.<pid>.part``, which is renamed to ``<key>.jar`` only once it
-opens as a jar holding the class, so a truncated jar is never used.
-``session.get_spark`` passes the jar in ``spark.jars``, which adds it to
-the driver's application class loader, not to the JVM class path that
-the archive is keyed by.
+``engine_jar`` compiles every ``*.java`` here with the JDK's ``javac``
+(``cds.java_home``) against ``$SPARK_HOME/jars/*`` and caches the jar
+beside the class archive, in ``$XDG_CACHE_HOME/spark-graft/jvm/<key>.jar``,
+keyed by the sources' sha256 (sorted by name), the Spark release and the
+JDK release. It is published like the archive: under the cache's lock
+``javac``'s classes are zipped to ``<key>.<pid>.part``, which is renamed
+to ``<key>.jar`` only once it opens as a jar holding every class, so a
+truncated jar is never used. ``session.get_spark`` passes the jar in
+``spark.jars``, which adds it to the driver's application class loader,
+not to the JVM class path that the archive is keyed by.
 """
 
 from __future__ import annotations
@@ -27,10 +32,15 @@ import tempfile
 import warnings
 import zipfile
 
+from py4j.java_gateway import JavaClass
+
 from spark_streaming_test_spark import cds
 
-SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "EdgeTrigger.java")
-CLASS_ENTRY = "sparkgraft/EdgeTrigger.class"
+SOURCES = sorted(glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "*.java")))
+PACKAGE = "sparkgraft"
+# The jar entry of each source's top-level class.
+CLASS_ENTRIES = [f"{PACKAGE}/{os.path.basename(s)[:-len('.java')]}.class" for s in SOURCES]
+CHECKPOINT_MANAGER = f"{PACKAGE}.LocalCheckpointFileManager"
 JAVAC_TIMEOUT_S = 300
 
 
@@ -41,28 +51,37 @@ def spark_release(spark_home: str) -> str:
     return os.path.basename(names[0])[len("spark-core_"):-len(".jar")] if names else ""
 
 
-def jar_key(source: bytes, spark: str, java: str) -> str:
-    """Name of the jar for one source text, Spark release and JDK release."""
-    h = hashlib.sha256(source)
+def jar_key(sources: list[bytes], spark: str, java: str) -> str:
+    """Name of the jar for the source texts (in ``SOURCES`` order), Spark
+    release and JDK release."""
+    h = hashlib.sha256()
+    for source in sources:
+        h.update(hashlib.sha256(source).digest())
     h.update(f"\0{spark}\0{java}".encode())
     return h.hexdigest()[:24]
 
 
 def is_jar(path: str) -> bool:
-    """Whether ``path`` is a whole jar that holds the compiled class."""
+    """Whether ``path`` is a whole jar that holds every source's class."""
     try:
         with zipfile.ZipFile(path) as z:
-            return CLASS_ENTRY in z.namelist() and z.testzip() is None
+            return set(CLASS_ENTRIES) <= set(z.namelist()) and z.testzip() is None
     except (OSError, zipfile.BadZipFile):
         return False
 
 
+def loaded(gateway_jvm) -> bool:
+    """Whether the running driver JVM loads the jar's classes: only a JVM
+    launched with the jar in ``spark.jars`` does."""
+    return isinstance(getattr(gateway_jvm, PACKAGE).LocalCheckpointFileManager, JavaClass)
+
+
 def compile_jar(javac: str, spark_home: str, out: str) -> None:
-    """Compile ``SOURCE`` and zip its classes to ``out``; on a compile
+    """Compile ``SOURCES`` and zip its classes to ``out``; on a compile
     error warn with ``javac``'s output and write nothing."""
     with tempfile.TemporaryDirectory(dir=os.path.dirname(out)) as classes:
         cmd = [javac, "-nowarn", "-d", classes,
-               "-cp", os.path.join(spark_home, "jars", "*"), SOURCE]
+               "-cp", os.path.join(spark_home, "jars", "*"), *SOURCES]
         try:
             done = subprocess.run(cmd, capture_output=True, text=True,
                                   timeout=JAVAC_TIMEOUT_S)
@@ -79,7 +98,7 @@ def compile_jar(javac: str, spark_home: str, out: str) -> None:
                     z.write(path, os.path.relpath(path, classes))
 
 
-def edge_trigger_jar(spark_home: str) -> str | None:
+def engine_jar(spark_home: str) -> str | None:
     """Path of the cached jar, compiled first when it is missing; None
     when there is neither a cached jar nor a ``javac``, or the cache is
     unusable. Concurrent first calls wait on the cache's lock, so one
@@ -87,8 +106,11 @@ def edge_trigger_jar(spark_home: str) -> str | None:
     home = cds.java_home()
     if home is None:
         return None
-    with open(SOURCE, "rb") as f:
-        key = jar_key(f.read(), spark_release(spark_home), cds.java_version(home))
+    sources = []
+    for path in SOURCES:
+        with open(path, "rb") as f:
+            sources.append(f.read())
+    key = jar_key(sources, spark_release(spark_home), cds.java_version(home))
     cache = cds.cache_dir("jvm")
     jar = os.path.join(cache, f"{key}.jar")
     if os.path.exists(jar):

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -23,6 +24,13 @@ from spark_streaming_test_spark.iterate import clear_memo
 # workers' path: the worker daemon and executor-side imports of the
 # package's pandas UDFs must not depend on the JVM's cwd.
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Hadoop's FileSystem-based streaming checkpoint manager: the session's
+# when the engine's jar (and so jvm.CHECKPOINT_MANAGER) is not loaded.
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def add_worker_path(path: str) -> None:
@@ -75,31 +83,35 @@ def get_spark(app_name: str = "spark_streaming_test_spark") -> SparkSession:
         # jar (~220 ms per task on Python 3.11).
         .config("spark.python.daemon.module",
                 "spark_streaming_test_spark.worker_daemon")
-        # Streaming checkpoints (offset, commit and source logs, state
-        # deltas and their checksums) go through Hadoop's FileSystem API,
-        # not the default FileContext. Without libhadoop, local
-        # FileContext forks a `readlink` per getFileLinkStatus, several
-        # per atomic write (~100 forks per micro-batch, ~30 ms per file);
-        # FileSystem forks only the `chmod` of the file and of its .crc.
-        # Same guarantees on file:: both write a temp file, check that
-        # the target is absent and POSIX-rename it (AbstractFileSystem
-        # .rename ends in RawLocalFileSystem.rename), and a second
-        # writer of a log entry still gets a subclass of Hadoop's
-        # FileAlreadyExistsException, which HDFSMetadataLog's
-        # concurrent-writer guard catches. An HDFS deployment that wants
-        # FileContext sets this back with --conf, like the partitions.
-        .config("spark.sql.streaming.checkpointFileManagerClass",
-                "org.apache.spark.sql.execution.streaming.checkpointing."
-                "FileSystemBasedCheckpointFileManager")
     )
-    # The edge-trigger state machine's jar (jvm), on the driver's
-    # application class loader; only the launching call can add it.
-    # Without javac and a cached jar the session starts without it, and
-    # only edge_trigger_stream fails.
+    # The engine's jar (jvm): the edge-trigger state machine and the
+    # checkpoint manager, on the driver's application class loader; only
+    # the launching call can add it. Without javac and a cached jar the
+    # session starts without it, and only edge_trigger_stream fails.
     if cds.launches_jvm():
-        jar = jvm.edge_trigger_jar(_find_spark_home())
+        jar = jvm.engine_jar(_find_spark_home())
         if jar is not None:
             builder = builder.config("spark.jars", jar)
+        has_jar = jar is not None
+    else:
+        has_jar = SparkContext._jvm is not None and jvm.loaded(SparkContext._jvm)
+    # Streaming checkpoints (offset, commit and source logs, state
+    # deltas and their checksums) go through Hadoop's FileSystem API,
+    # not the default FileContext. Without libhadoop, local FileContext
+    # forks a `readlink` per getFileLinkStatus, several per atomic write
+    # (~100 forks per micro-batch, ~30 ms per file), and FileSystem forks
+    # the `chmod` of the file and of its .crc; the jar's manager sets
+    # those modes with chmod(2), so steady batches fork nothing. Same
+    # guarantees on file:: both write a temp file, check that the target
+    # is absent and POSIX-rename it (AbstractFileSystem.rename ends in
+    # RawLocalFileSystem.rename), and a second writer of a log entry
+    # still gets a subclass of Hadoop's FileAlreadyExistsException, which
+    # HDFSMetadataLog's concurrent-writer guard catches. Every call
+    # names the same class, because builder.config re-applies SQL confs
+    # to a running session. An HDFS deployment that wants FileContext
+    # sets this back with --conf, like the partitions.
+    builder = builder.config("spark.sql.streaming.checkpointFileManagerClass",
+                             jvm.CHECKPOINT_MANAGER if has_jar else FS_CHECKPOINT_MANAGER)
     if "SPARK_GRAFT_DRIVER_MEMORY" in os.environ:
         builder = builder.config(
             "spark.driver.memory", os.environ["SPARK_GRAFT_DRIVER_MEMORY"]

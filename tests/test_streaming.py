@@ -2245,13 +2245,15 @@ spark.stop()
 """
 
 
-def test_checkpoint_writes_fork_no_readlink(tmp_path):
+def test_checkpoint_writes_fork_no_readlink_or_chmod(tmp_path):
     """Without libhadoop, Hadoop's local FileContext forks a `readlink`
     for every getFileLinkStatus (56 per micro-batch at 2 state
-    partitions through the default checkpoint manager); the session's
-    FileSystem-based manager forks none. Shims first on the JVM's PATH
-    log every `readlink` and `chmod` it starts; batches after the first
-    must start no readlink."""
+    partitions through the default checkpoint manager), and
+    RawLocalFileSystem.setPermission forks a `chmod` for every file and
+    .crc it creates (22 per batch at 4 state partitions through
+    FileSystemBasedCheckpointFileManager); the session's manager forks
+    neither. Shims first on the JVM's PATH log every `readlink` and
+    `chmod` it starts; batches after the first must start none."""
     real = {cmd: shutil.which(cmd) for cmd in ("readlink", "chmod")}
     if None in real.values():
         pytest.skip("no readlink/chmod binary on PATH")
@@ -2287,7 +2289,7 @@ def test_checkpoint_writes_fork_no_readlink(tmp_path):
         f"batch {i}: {c['readlink']} readlink / {c['chmod']} chmod"
         for i, c in enumerate(per_batch)
     )
-    assert all(c["readlink"] == 0 for c in per_batch[1:]), forks
+    assert all(c["readlink"] == 0 and c["chmod"] == 0 for c in per_batch[1:]), forks
 
 
 def test_checkpoint_manager_keeps_atomic_logs_and_checksums(spark, tmp_path):
@@ -2343,6 +2345,69 @@ def test_checkpoint_manager_keeps_atomic_logs_and_checksums(spark, tmp_path):
         assert os.path.exists(f"{d}/.{name}.crc"), f"no Hadoop .crc for {f}"
     for f in deltas:
         assert os.path.exists(f"{f}.crc"), f"no Spark checksum for {f}"
+
+
+def test_checkpoint_file_modes_match_the_filesystem_manager(spark, tmp_path):
+    """The session's manager sets each checkpoint file's mode in the JVM;
+    every file and directory a short edge-trigger stream leaves (offset,
+    commit and source logs, state deltas, Spark's checksum files and
+    every .crc) must get the mode Hadoop's FileSystem-based manager gives
+    it, under the same umask."""
+    from spark_streaming_test_spark import jvm
+    from spark_streaming_test_spark.session import FS_CHECKPOINT_MANAGER
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == jvm.CHECKPOINT_MANAGER
+
+    def modes(name):
+        src = str(tmp_path / name / "in")
+        chk = str(tmp_path / name / "chk")
+        for i, rows in enumerate([[("A", 200.0, _ts(0))], [("A", 80.0, _ts(1))]]):
+            _write_packet_batch(spark, src, rows, i)
+        totals = packet_stream_from_dir(spark, src).select(
+            "nif", F.col("bytes").alias("total_bytes")
+        )
+        q = (
+            edge_trigger_stream(totals, max_limit=150.0)
+            .writeStream.foreachBatch(lambda df, _bid: df.collect())
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        # Which manager wrote them: the session's, or the one asked for.
+        manager = (
+            spark._jvm.org.apache.spark.sql.execution.streaming.checkpointing
+            .CheckpointFileManager.create(
+                spark._jvm.org.apache.hadoop.fs.Path(f"file://{chk}"),
+                spark._jsparkSession.sessionState().newHadoopConf(),
+            ).getClass().getName()
+        )
+        out = {}
+        for root, dirs, files in os.walk(chk):
+            for n in dirs + files:
+                path = os.path.join(root, n)
+                out[os.path.relpath(path, chk)] = oct(os.stat(path).st_mode)
+        return manager, out
+
+    ours, got = modes("session")
+    spark.conf.set(key, FS_CHECKPOINT_MANAGER)
+    try:
+        theirs, want = modes("filesystem")
+    finally:
+        spark.conf.set(key, jvm.CHECKPOINT_MANAGER)
+    assert (ours, theirs) == (jvm.CHECKPOINT_MANAGER, FS_CHECKPOINT_MANAGER)
+    # The maintenance thread may snapshot one run's state and not the other's.
+    common = got.keys() & want.keys()
+    assert {p: got[p] for p in common} == {p: want[p] for p in common}
+    names = [os.path.basename(p) for p in common]
+    for kind in ("offsets/1", "commits/1", "sources/0/1", "offsets/.1.crc"):
+        assert kind in common, sorted(common)
+    assert any(n.endswith(".delta") for n in names), sorted(common)
+    assert any(n.endswith(".delta.crc") and not n.startswith(".") for n in names)
+    assert any(n.endswith(".delta.crc") and n.startswith(".") for n in names)
 
 
 def test_edge_trigger_resumes_past_leftover_checkpoint_temp_files(spark, tmp_path):
